@@ -85,23 +85,14 @@ def brute_topk(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str 
     )
 
 
-def brute_topk_blas(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k via Arrow-batched numpy matmul (FAISS-flat shape).
-
-    Semantics identical to brute_topk (same rounding, same tiebreak); the
-    physical strategy differs: the index side (all vectors) is collected to
-    a numpy matrix and broadcast (~1 MB per 2k×64 — a dim table), and each
-    Arrow batch of queries computes one BLAS gemm + argpartition. No |N|²
-    row join materializes anywhere. This is the justified Pandas-path
-    exception (SURVEY §2.13): a dense matmul has no efficient built-in
-    expression. For index sides too big to broadcast, use lsh_topk.
-    """
+def brute_index(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"):
+    """The brute-BLAS index side: every vector collected to the driver and
+    broadcast as ONE ``(ids, matrix, norms)`` value (~1 MB per 2k×64 — a
+    dim table). ``ann_topk`` memoizes it per snapshot; ``brute_topk_blas``
+    builds one per call when none is passed."""
     import numpy as np
-    import pandas as pd
 
-    spark = emb.sparkSession
     local = emb.select(id_col, _as_double(F.col(vec_col)).alias("v")).toPandas()
-    ids = local[id_col].to_numpy()
     mat = np.stack(local["v"].to_numpy())
     # keep RAW vectors and divide the dot by the norm product — the same
     # operation order as DuckDB list_cosine_similarity (dot/(|a||b|)), so
@@ -109,17 +100,36 @@ def brute_topk_blas(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col:
     # Zero vectors get norm 1 -> cosine 0 instead of NaN.
     norms = np.linalg.norm(mat, axis=1)
     norms = np.where(norms == 0, 1.0, norms)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
+    return emb.sparkSession.sparkContext.broadcast((local[id_col].to_numpy(), mat, norms))
+
+
+def brute_topk_blas(
+    emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding", index=None
+) -> DataFrame:
+    """Exact cosine top-k via Arrow-batched numpy matmul (FAISS-flat shape).
+
+    Semantics identical to brute_topk (same rounding, same tiebreak); the
+    physical strategy differs: the index side (all vectors) is collected to
+    a numpy matrix and broadcast (``brute_index``; pass ``index`` to reuse
+    one built over the same ``emb``), and each Arrow batch of queries
+    computes one BLAS gemm + argpartition. No |N|² row join materializes
+    anywhere. This is the justified Pandas-path exception (SURVEY §2.13): a
+    dense matmul has no efficient built-in expression. For index sides too
+    big to broadcast, use lsh_topk.
+    """
+    import numpy as np
+    import pandas as pd
+
+    spark = emb.sparkSession
+    if index is None:
+        index = brute_index(emb, id_col, vec_col)
 
     def batches(it):
         idx_of = None
         sims_buf = den_buf = None
         CHUNK = 512
         for pdf in it:
-            ids_l = b_ids.value
-            m = b_mat.value
+            ids_l, m, norms = index.value
             n_idx = m.shape[0]
             if idx_of is None:
                 idx_of = {int(i): j for j, i in enumerate(ids_l)}
@@ -145,7 +155,7 @@ def brute_topk_blas(emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col:
                 sims = sims_buf[: len(cpdf)]
                 den = den_buf[: len(cpdf)]
                 np.dot(q, m.T, out=sims)
-                np.multiply(qn[:, None], b_norms.value[None, :], out=den)
+                np.multiply(qn[:, None], norms[None, :], out=den)
                 np.divide(sims, den, out=sims)
                 np.round(sims, 6, out=sims)
                 qids = cpdf[id_col].to_numpy()
@@ -600,6 +610,7 @@ def ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_broadcast_rows: int = BRUTE_INDEX_MAX_ROWS,
+    snapshot: str | None = None,
 ) -> DataFrame:
     """Size-dispatched cosine top-k: exact brute-BLAS while the index side
     is dim-table-sized (one broadcast, no shuffle), LSH bucket equi-join
@@ -607,10 +618,26 @@ def ann_topk(
     count() that picks the path is one columnar scan — noise next to
     either strategy. This is the entry every registry query routes
     through, so no oracle-checked query has an UNCONDITIONAL driver
-    toPandas (round-1 judge flag)."""
-    n = emb.count()
+    toPandas (round-1 judge flag).
+
+    ``snapshot`` names the immutable source ``emb`` was read from (the
+    registry passes its sf_dir). With it, the row count and the brute
+    index are memoized per (app, snapshot) in plans/_memo, so a warm
+    request runs only its own search job; without it (refresh's
+    similarity_graph over a freshly landed corpus) both are built per
+    call."""
+
+    def once(name: str, build):
+        if snapshot is None:
+            return build()
+        from ..plans._memo import memo
+
+        return memo(emb.sparkSession, (name, snapshot, id_col, vec_col), build)
+
+    n = once("ann_rows", emb.count)
     if n <= max_broadcast_rows:
-        return brute_topk_blas(emb, k, id_col, vec_col)
+        index = once("ann_brute_index", lambda: brute_index(emb, id_col, vec_col))
+        return brute_topk_blas(emb, k, id_col, vec_col, index=index)
     # pass the already-computed count through as the resolved plane count:
     # lsh_topk(n_planes=None) would re-run the same full-plan count()
     # action on exactly the large-corpus path this dispatch targets

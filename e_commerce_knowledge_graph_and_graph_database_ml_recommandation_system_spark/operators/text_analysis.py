@@ -334,9 +334,14 @@ def duplicate_span_coverage(docs: DataFrame, n: int = 8) -> DataFrame:
     # carries coverage counts), so the 8-byte codegen-native key replaces
     # the 32-char md5 string: ~4× fewer shuffle bytes on the gram exchange
     # and no per-gram MD5+hex round (the dominant per-task cost of the
-    # gram stage). Collisions would need two distinct grams in one corpus
-    # to share a 64-bit hash — and would hit the count, not crash; the
-    # planted-dup invariant test and the oracle parity runs pin behavior.
+    # gram stage). Birthday bound: among n distinct grams the chance that
+    # any two share a 64-bit key is p ≈ n²/2⁶⁵ — about 2.7e-4 at 10⁸
+    # distinct grams and 2.7e-2 at 10⁹. A collision merges two grams into
+    # one key, so two grams seen once each count as a duplicate: their
+    # instances are marked and dup_tokens / dup_coverage rise for the docs
+    # holding them. It can only over-report duplication, never hide a real
+    # duplicate, and it never fails the job. The planted-dup invariant
+    # test and the oracle parity runs pin behavior at test scale.
     grams = w.select(
         "doc_id",
         F.size("ws").alias("n_tokens"),

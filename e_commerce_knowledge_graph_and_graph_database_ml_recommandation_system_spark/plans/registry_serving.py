@@ -13,11 +13,93 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import topk as tk
-from ..sources.tables import load_tables
+from ..operators.ranking import global_rank_with_prefix
+from ..sources.tables import load_table, load_tables
+from ._memo import memo
 from .flagship import shared_purchased_pairs, shared_scored_valid_products
 from .registry import register
 
-SERVE_TABLES = ("customer", "orders", "lineitem", "part")
+# the serving cohort: c_custkey % 100 == 0. Every memo tag below carries it,
+# so a caller with a different cohort cannot read a stale prefix.
+COHORT = "mod100"
+#: a pruned request broadcasts the cohort's purchase pairs into its
+#: anti-join up to this many pairs (16 B each: 16 MB)
+PURCHASED_BROADCAST_MAX_ROWS = 1_000_000
+
+
+def _cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The serving cohort's customer keys (|C|/100 rows), memoized."""
+    return memo(
+        spark,
+        ("serve_cohort", sf_dir, COHORT),
+        lambda: load_table(spark, "customer", sf_dir)
+        .filter(F.pmod(F.col("c_custkey"), F.lit(100)) == 0)
+        .select("c_custkey"),
+    )
+
+
+def _cohort_purchased(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cohort's distinct purchase pairs (c_custkey, p_partkey),
+    memoized: the anti-join reads this cohort-sized relation, not every
+    purchase pair of the snapshot."""
+    return memo(
+        spark,
+        ("serve_cohort_purchased", sf_dir, COHORT),
+        lambda: shared_purchased_pairs(spark, sf_dir).join(_cohort(spark, sf_dir), "c_custkey"),
+    )
+
+
+def _broadcastable_purchased(spark: SparkSession, sf_dir: str) -> bool:
+    """Whether the cohort's purchase pairs fit a broadcast (row count
+    memoized). A checkpoint carries no size statistics, so unhinted the
+    anti-join plans as a sort-merge join and AQE only turns it into a
+    broadcast after running a shuffle stage: one extra job per request."""
+    n = memo(spark, ("serve_cohort_purchased_rows", sf_dir, COHORT), _cohort_purchased(spark, sf_dir).count)
+    return n <= PURCHASED_BROADCAST_MAX_ROWS
+
+
+def _ranked_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The scored valid products with their global position ``pos`` and
+    per-category position ``cat_pos`` (score desc, p_partkey asc),
+    memoized: |P| rows, ranked once per snapshot. The global position is
+    the distributed rank of operators/ranking (range partition + local
+    windows + broadcast offsets), so no step funnels |part| through one
+    task; the per-category window is partitioned by category."""
+
+    def build() -> DataFrame:
+        by_score = [F.desc("score"), F.asc("p_partkey")]
+        valid = shared_scored_valid_products(spark, sf_dir).withColumn("_zero", F.lit(0).cast("long"))
+        return (
+            global_rank_with_prefix(valid, by_score, "_zero")
+            .withColumnRenamed("rank", "pos")
+            .withColumn("cat_pos", F.row_number().over(Window.partitionBy("category").orderBy(*by_score)))
+            .drop("_zero", "cum_value", "total_n", "total_value")
+        )
+
+    return memo(spark, ("serve_ranked_valid", sf_dir), build)
+
+
+def _prefix_bound(spark: SparkSession, sf_dir: str, mode: str) -> int:
+    """The k-independent part of a prune bound, memoized as a scalar:
+    ``p_max`` (most products any cohort customer purchased) for
+    ``"global"``, ``c_max`` (most any cohort customer purchased in one
+    category) for ``"category"``."""
+
+    def build() -> int:
+        purchased = _cohort_purchased(spark, sf_dir)
+        if mode == "global":
+            per_group = purchased.groupBy("c_custkey")
+        else:
+            part_cat = load_table(spark, "part", sf_dir).select("p_partkey", F.col("p_type").alias("category"))
+            per_group = purchased.join(F.broadcast(part_cat), "p_partkey").groupBy("c_custkey", "category")
+        return (
+            per_group.agg(F.count("*").alias("n"))
+            .agg(F.coalesce(F.max("n"), F.lit(0)).alias("m"))
+            .first()["m"]
+        )
+
+    tag = "serve_prune_pmax" if mode == "global" else "serve_prune_cmax"
+    return memo(spark, (tag, sf_dir, COHORT), build)
 
 
 def _candidates(spark: SparkSession, sf_dir: str, prune: tuple[str, int] | None = None) -> DataFrame:
@@ -39,78 +121,31 @@ def _candidates(spark: SparkSession, sf_dir: str, prune: tuple[str, int] | None 
     * ``None`` — full distribution (median-per-category and softmax
       samplers genuinely need every candidate; the cohort is |C|/100, so
       this is a shuffle join at scale, not a broadcast).
+
+    Every input is a memoized prefix of the snapshot, so a request builds
+    and runs only its own plan: a pruned request filters a memoized
+    position column against a literal bound, and the cross product with
+    the cohort is built lazily per request, never memoized.
     """
-    t = load_tables(spark, sf_dir, names=("customer", "part"))
-    cohort = t["customer"].filter(F.pmod(F.col("c_custkey"), F.lit(100)) == 0).select("c_custkey")
-    # memo-shared across the 7 serving consumers (r11): one checkpoint of
-    # the scored-product relation and one of the distinct purchase pairs
-    # (the latter the SAME materialization the positive-pair family reads)
-    valid = shared_scored_valid_products(spark, sf_dir)
-    purchased = shared_purchased_pairs(spark, sf_dir)
-    cohort_purchased = purchased.join(cohort, "c_custkey")
-
-    if prune is not None:
-        # The prefix bound (p_max/c_max + k) is collected to the driver as a
-        # Python SCALAR rather than crossJoined as a 1-row column: with a
-        # LITERAL bound, Spark's InferWindowGroupLimit rewrite inserts a
-        # partial top-k (WindowGroupLimit) on each map partition BEFORE the
-        # window's shuffle, so the global-order window sees at most
-        # bound×n_partitions rows instead of the full |part| relation
-        # funneling through one task (round-4 judge item: a column bound
-        # defeats the rewrite — 2M-row single-task sort at 100×). Cost: one
-        # extra tiny driver barrier per serving query.
-        # the two prefix bounds are k-INDEPENDENT scalars over the shared
-        # cohort-purchase relation; four serving queries each paid this
-        # driver-barrier job per run — memoize per (app, sf_dir) like the
-        # relations they derive from (r11; memo stores non-DataFrame
-        # artifacts as-is). The tag carries the cohort identifier
-        # ('mod100' = the c_custkey%100 serving cohort) so a future caller
-        # with a different cohort or purchase source cannot read a stale
-        # scalar (r11 ADVICE).
-        from ._memo import memo
-
+    purchased = _cohort_purchased(spark, sf_dir)
+    if prune is None:
+        # |part|-sized: a forced broadcast hint would override AQE and ship
+        # a multi-GB table at 100× part — every join strategy here is
+        # AQE's size-based call
+        valid = shared_scored_valid_products(spark, sf_dir)
+    else:
         mode, k = prune
-        if mode == "global":
-            p_max = memo(
-                spark,
-                ("serve_prune_pmax", sf_dir, "mod100"),
-                lambda: cohort_purchased.groupBy("c_custkey")
-                .agg(F.count("*").alias("n"))
-                .agg(F.coalesce(F.max("n"), F.lit(0)).alias("p_max"))
-                .first()["p_max"],
-            )
-            w = Window.orderBy(F.desc("score"), F.asc("p_partkey"))
-            valid = (
-                valid.withColumn("pos", F.row_number().over(w))
-                .filter(F.col("pos") <= F.lit(int(p_max) + k))
-                .drop("pos")
-            )
-        else:  # per-category prefix
-            part_cat = t["part"].select("p_partkey", F.col("p_type").alias("category"))
-            c_max = memo(
-                spark,
-                ("serve_prune_cmax", sf_dir, "mod100"),
-                lambda: cohort_purchased.join(F.broadcast(part_cat), "p_partkey")
-                .groupBy("c_custkey", "category")
-                .agg(F.count("*").alias("n"))
-                .agg(F.coalesce(F.max("n"), F.lit(0)).alias("c_max"))
-                .first()["c_max"],
-            )
-            w = Window.partitionBy("category").orderBy(F.desc("score"), F.asc("p_partkey"))
-            valid = (
-                valid.withColumn("pos", F.row_number().over(w))
-                .filter(F.col("pos") <= F.lit(int(c_max) + k))
-                .drop("pos")
-            )
-
-    # Only the PRUNED prefix is dim-sized by construction and safe to hint.
-    # The unpruned full distribution is |part|-sized: a forced broadcast
-    # hint would override AQE and ship a multi-GB table (or OOM the driver)
-    # at 100× part — leave it unhinted and let AQE pick broadcast vs
-    # shuffle from the observed size.
-    valid_side = F.broadcast(valid) if prune is not None else valid
+        pos = "pos" if mode == "global" else "cat_pos"
+        bound = int(_prefix_bound(spark, sf_dir, mode)) + k
+        # the pruned prefix is dim-sized by construction: safe to broadcast
+        valid = F.broadcast(
+            _ranked_valid(spark, sf_dir).filter(F.col(pos) <= F.lit(bound)).drop("pos", "cat_pos")
+        )
+        if _broadcastable_purchased(spark, sf_dir):
+            purchased = F.broadcast(purchased)
     return (
-        cohort.crossJoin(valid_side)
+        _cohort(spark, sf_dir)
+        .crossJoin(valid)
         .join(purchased, ["c_custkey", "p_partkey"], "left_anti")
         .select(
             F.col("c_custkey").alias("customer_id"),
@@ -340,9 +375,8 @@ def q_serve_display_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P11/P12: display-record projection + conditional display-name
     derivation (reference ``topk_recommandations_diverse_nodiscounts.py:
     317-347``: product message string + customer display name)."""
-    t = load_tables(spark, sf_dir, names=SERVE_TABLES)
     topk = tk.topk_per_customer(_candidates(spark, sf_dir, prune=("global", 3)), k=3)
-    cust = t["customer"].select(
+    cust = load_table(spark, "customer", sf_dir).select(
         F.col("c_custkey").alias("customer_id"),
         F.concat_ws(", ", F.col("c_name"), F.col("c_mktsegment")).alias("display_name"),
     )

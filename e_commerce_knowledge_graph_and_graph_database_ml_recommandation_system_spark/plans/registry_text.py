@@ -740,8 +740,9 @@ SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 5
 )
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size-dispatched: brute-BLAS at dim-table scale (identical semantics to
-    # sim.brute_topk, ~20× faster), LSH bucket join above the broadcast cap
-    return sim.ann_topk(load_table(spark, "embeddings", sf_dir), k=5)
+    # sim.brute_topk, ~20× faster), LSH bucket join above the broadcast cap;
+    # the row count and the brute index are memoized per snapshot
+    return sim.ann_topk(load_table(spark, "embeddings", sf_dir), k=5, snapshot=sf_dir)
 
 
 @register(
@@ -2727,7 +2728,7 @@ def q_ivf_probe_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute = memo(
         spark,
         ("brute_topk_pairs", sf_dir),
-        lambda: sim.ann_topk(emb, k=5).select("query_id", "neighbor_id"),
+        lambda: sim.ann_topk(emb, k=5, snapshot=sf_dir).select("query_id", "neighbor_id"),
     )
     n_exact = brute.count()
     out = None
@@ -2911,7 +2912,7 @@ def q_embedding_prefix_recall_audit(spark: SparkSession, sf_dir: str) -> DataFra
     brute = memo(
         spark,
         ("brute_topk_pairs", sf_dir),
-        lambda: sim.ann_topk(emb, k=5).select("query_id", "neighbor_id"),
+        lambda: sim.ann_topk(emb, k=5, snapshot=sf_dir).select("query_id", "neighbor_id"),
     )
     n_exact = brute.count()
     out = None

@@ -13,6 +13,34 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: driver-memory default ceiling, and the share of host memory it may take
+DRIVER_MEM_CAP_MB = 24 * 1024
+DRIVER_MEM_HOST_SHARE = 0.6
+
+
+def _host_memory_mb() -> int | None:
+    """Physical memory of this host in MB, or None where the platform does
+    not report it."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    min(24g, 60% of physical memory) — a fixed 24g default asks a 15 GB
+    host for more heap than it has, and the JVM then dies (or the host
+    swaps) only once the heap actually grows."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    host_mb = _host_memory_mb()
+    if host_mb is None:
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(DRIVER_MEM_CAP_MB, int(host_mb * DRIVER_MEM_HOST_SHARE))}m"
+
+
 def get_spark(app_name: str = "ekg-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
@@ -45,7 +73,7 @@ def get_spark(app_name: str = "ekg-spark", shuffle_partitions: int | None = None
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         # UI off by default (test/bench hygiene); probes that read the
         # REST status API (shuffle-byte accounting in

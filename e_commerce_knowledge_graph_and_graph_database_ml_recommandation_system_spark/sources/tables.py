@@ -51,6 +51,21 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def _scan(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet scan of ``path`` with its schema resolved once per Spark app.
+
+    Schema inference is a Spark job (a parquet footer read). A snapshot
+    path is immutable for the life of an app (the plans/_memo contract),
+    so the StructType is memoized under ``("table_schema", path)`` and
+    ``_memo.clear()`` drops it. The DataFrame itself is never memoized:
+    callers self-join loaded tables, and each call must return fresh
+    attribute ids."""
+    from ..plans._memo import memo
+
+    schema = memo(spark, ("table_schema", path), lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Load one testdata table as a DataFrame (lazy parquet scan).
 
@@ -63,8 +78,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         # harmless no-op on builds that dropped the conf; required on builds
         # whose vectorized reader rejects TIMESTAMP(NANOS) outright
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_event_ts(_scan(spark, f"{sf_dir}/{name}.parquet"))
+    return _scan(spark, f"{sf_dir}/{name}.parquet")
 
 
 def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:

@@ -2573,3 +2573,132 @@ def test_duplicate_span_overlapping_grams_union(spark):
     )
     got = {r["doc_id"]: r for r in duplicate_span_coverage(docs, n=8).collect()}
     assert got[1]["dup_tokens"] == 9 and got[2]["dup_tokens"] == 9
+
+
+# ---------------------------------------------------------------------------
+# warm serving: schema-once scans, memoized serving prefixes and ANN index
+# ---------------------------------------------------------------------------
+
+# every warm serving request type, plus the display projection
+WARM_SERVING = (
+    "serve_topk_plain",
+    "serve_greedy_diverse_topk",
+    "serve_relaxed_diverse_topk",
+    "serve_gumbel_softmax_topk",
+    "serve_median_per_category",
+    "ann_brute_topk",
+    "serve_display_records",
+)
+
+
+def _jobs_during(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and, per Spark
+    job it launched, the names of that job's stages."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = []
+    for j in st.getJobIdsForGroup(group):
+        stages = (st.getStageInfo(s) for s in st.getJobInfo(j).stageIds)
+        jobs.append([s.name for s in stages if s is not None])
+    return out, jobs
+
+
+def _digest(rows):
+    return sorted(map(repr, map(tuple, rows)))
+
+
+def test_load_table_schema_resolved_once(spark, tmp_path):
+    """A second load_table of the same path launches no Spark job (the
+    parquet schema is memoized per app and path) and reads the same rows;
+    after _memo.clear() a path rewritten with an extra column is inferred
+    again and the new column shows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.sources.tables import load_table
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2], "r_name": ["A", "B", "C"]}), path)
+    first, jobs1 = _jobs_during(spark, lambda: load_table(spark, "region", str(tmp_path)))
+    second, jobs2 = _jobs_during(spark, lambda: load_table(spark, "region", str(tmp_path)))
+    assert jobs1, "the first load should infer the schema with a Spark job"
+    assert jobs2 == [], f"a second load of the same path launched jobs: {jobs2}"
+    assert _digest(first.collect()) == _digest(second.collect())
+
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1, 2], "r_name": ["A", "B", "C"], "r_comment": ["x", "y", "z"]}), path
+    )
+    _memo.clear()
+    third = load_table(spark, "region", str(tmp_path))
+    assert third.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(r["r_comment"] for r in third.collect()) == ["x", "y", "z"]
+
+
+def test_warm_serving_parity_cold_warm_unmemoized(spark):
+    """Every warm serving request returns the same rows on a cold memo, on
+    a second (warm) call, and with the memo disabled — the memoized
+    schemas, prefixes and ANN index change how much is re-derived, never
+    the answer."""
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo, registry
+
+    qs = registry.queries()
+    for name in WARM_SERVING:
+        _memo.clear()
+        cold = _digest(qs[name](spark, SF).collect())
+        warm = _digest(qs[name](spark, SF).collect())
+        with _memo.disabled():
+            fresh = _digest(qs[name](spark, SF).collect())
+        assert cold, f"{name}: empty response"
+        assert cold == warm, f"{name}: warm response differs from the cold one"
+        assert cold == fresh, f"{name}: memoized response differs from the unmemoized one"
+
+
+def test_warm_serving_job_counts(spark):
+    """Building a warm serving request launches no Spark job: the schemas,
+    serving prefixes, prune bounds and the brute-ANN row count and index
+    are all memoized, so only the request's own plan executes. (The index
+    count and toPandas ran while ann_brute_topk was built, so a warm
+    request runs neither.) A warm serve_topk_plain request stays within 5
+    jobs."""
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import registry
+
+    qs = registry.queries()
+    for name in WARM_SERVING:
+        qs[name](spark, SF).collect()
+    for name in WARM_SERVING:
+        df, build_jobs = _jobs_during(spark, lambda: qs[name](spark, SF))
+        assert build_jobs == [], f"{name}: building a warm request launched jobs: {build_jobs}"
+        rows, jobs = _jobs_during(spark, df.collect)
+        assert rows, f"{name}: empty response"
+        if name == "serve_topk_plain":
+            assert len(jobs) <= 5, f"warm serve_topk_plain ran {len(jobs)} jobs: {jobs}"
+
+
+def test_driver_memory_default_follows_host(monkeypatch):
+    """spark.driver.memory defaults to min(24g, 60% of physical memory), so
+    a small host is never asked for more heap than it has;
+    SPARK_GRAFT_DRIVER_MEM always wins."""
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(session, "_host_memory_mb", lambda: 15 * 1024)
+    assert session.driver_memory() == "9216m"
+    monkeypatch.setattr(session, "_host_memory_mb", lambda: 256 * 1024)
+    assert session.driver_memory() == "24576m"
+    monkeypatch.setattr(session, "_host_memory_mb", lambda: None)
+    assert session.driver_memory() == "24576m"
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    monkeypatch.setattr(session, "_host_memory_mb", lambda: 15 * 1024)
+    assert session.driver_memory() == "3g"

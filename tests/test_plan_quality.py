@@ -241,33 +241,69 @@ def test_global_rank_no_single_partition_window(spark, queries, qname):
     exchange under a final scalar HashAggregate (spearman's 1-row moment
     fold) is fine — partial aggregation runs map-side, so the exchange
     moves num-partitions pre-aggregated rows, not the relation."""
-    plan = _plan(spark, queries[qname](spark, SF_DIR))
+    _assert_no_single_partition_window(_plan(spark, queries[qname](spark, SF_DIR)), qname)
+
+
+def _assert_no_single_partition_window(plan: str, label: str) -> None:
+    """No Window/Sort within three tree lines above an Exchange whose
+    arguments say SinglePartition. In a formatted plan the arguments sit in
+    the node's detail section, ``(N) Exchange ... Arguments:
+    SinglePartition``, and the tree names the node ``Exchange (N)``."""
+    single = {
+        m.group(1)
+        for m in re.finditer(r"^\((\d+)\) Exchange\n(?:[^\n]+\n)*?Arguments: SinglePartition", plan, re.M)
+    }
     lines = plan.splitlines()
     for i, line in enumerate(lines):
-        if "SinglePartition" not in line:
+        if "SinglePartition" not in line and not any(f"Exchange ({n})" in line for n in single):
             continue
         consumers = " ".join(lines[max(0, i - 3) : i])
         assert "Window" not in consumers and "Sort" not in consumers, (
-            f"{qname}: row-scale Window/Sort fed by a SinglePartition exchange"
+            f"{label}: row-scale Window/Sort fed by a SinglePartition exchange"
         )
 
 
-@pytest.mark.parametrize(
-    "qname", ["serve_topk_plain", "serve_relaxed_diverse_topk", "serve_display_records"]
-)
-def test_serving_global_prune_window_is_limit_bounded(spark, queries, qname):
-    """The serving 'global' prune ranks ALL valid products by score; with a
-    COLUMN prefix bound (the old 1-row crossJoin) the no-partitionBy window
-    funnels the whole |part| relation through one task (round-4 judge item).
-    With the literal bound, LimitPushDownThroughWindow must rewrite it to
-    GlobalLimit/LocalLimit under the window, so the single-partition window
-    only ever sees a prefix-sized (p_max+k) input — bounded by one
-    customer's purchase count, never by |part|."""
-    df = queries[qname](spark, SF_DIR)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    limits = [int(m) for m in re.findall(r"LocalLimit (\d+)", plan)]
-    assert limits, f"{qname}: limit pushdown under the global prune window did not fire"
-    assert all(n < 10_000 for n in limits), f"{qname}: prefix limit not prefix-sized: {limits}"
+# pruned serving request -> the memoized position column its prune filters
+SERVING_PRUNE_POSITION = {
+    "serve_topk_plain": "pos",
+    "serve_relaxed_diverse_topk": "pos",
+    "serve_display_records": "pos",
+    "serve_greedy_diverse_topk": "cat_pos",
+}
+
+
+@pytest.mark.parametrize("qname", sorted(SERVING_PRUNE_POSITION))
+def test_serving_prune_filters_memoized_position(spark, queries, qname):
+    """A pruned serving request runs NO window over the valid products: the
+    global and per-category positions are ranked once per snapshot
+    (registry_serving._ranked_valid) and the request filters one of them
+    against a literal, prefix-sized bound (p_max+k or c_max+k — bounded by
+    one customer's purchase count, never by |part|)."""
+    queries[qname](spark, SF_DIR).collect()  # warm the memo
+    plan = queries[qname](spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+    pos = SERVING_PRUNE_POSITION[qname]
+    bounds = [int(m) for m in re.findall(rf"\b{pos}#\d+L? <= (\d+)", plan)]
+    assert bounds, f"{qname}: no literal prefix bound on {pos}:\n{plan[:2000]}"
+    assert all(b < 10_000 for b in bounds), f"{qname}: prefix bound not prefix-sized: {bounds}"
+    assert not re.search(r"AS (cat_)?pos#", plan), f"{qname}: the request re-ranks the products"
+
+
+def test_serving_ranked_products_no_single_partition_window(spark):
+    """The memoized ranking behind every pruned serving request must keep
+    |part| off a single task: the global position comes from the
+    distributed rank (operators/ranking.py) and the per-category window is
+    partitioned by category. Checked on the build's own plan and on every
+    plan it checkpoints on the way, with the memo disabled so the real
+    dataflow shows."""
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo, registry  # noqa: F401
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans.registry_serving import (
+        _ranked_valid,
+    )
+
+    with _memo.disabled(), _memo.capturing_checkpoints() as plans:
+        plans.append(_plan(spark, _ranked_valid(spark, SF_DIR)))
+    for plan in plans:
+        _assert_no_single_partition_window(plan, "serving product ranking")
 
 
 def test_ddsketch_exact_rider_no_row_scale_takeordered(spark, queries):
@@ -285,15 +321,6 @@ def test_ddsketch_exact_rider_no_row_scale_takeordered(spark, queries):
     n_ops = plan.count("TakeOrderedAndProject\n")
     assert len(limits) == n_ops, "unparsed TakeOrdered arguments in ddsketch plan"
     assert all(k == 1 for k in limits), f"row-scale TakeOrdered in ddsketch plan: {limits}"
-
-
-def test_serving_category_prune_window_group_limit(spark, queries):
-    """Category-mode prune (partitionBy category) with the literal bound
-    must carry the rank-limit pushdown (WindowGroupLimit Partial before the
-    shuffle) so each map task prunes to c_max+k rows per category."""
-    df = queries["serve_greedy_diverse_topk"](spark, SF_DIR)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "WindowGroupLimit" in plan, "category prefix prune lost the WindowGroupLimit rewrite"
 
 
 def test_token_stats_column_pruning(spark, queries):
