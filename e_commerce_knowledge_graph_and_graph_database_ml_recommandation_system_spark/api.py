@@ -14,18 +14,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .graph.build import build_edges, build_nodes, graph_stats
+from .graph.build import GRAPH_TABLES, build_edges, build_nodes, graph_stats
 from .sources.tables import load_table, load_tables
 
-GRAPH_TABLES = ("customer", "orders", "lineitem", "part", "nation", "region")
+
+def _graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Scan the graph's source tables and build (nodes, edges). Calls
+    ``build_nodes`` / ``build_edges`` through this module's globals, so a
+    wrapper set on ``api.build_nodes`` / ``api.build_edges`` sees every
+    graph build."""
+    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
+    return build_nodes(tables), build_edges(tables)
 
 
 def ingest_and_build_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     """EP1 (``First_Data_injection.py`` → ``knowledge_graph_creation.py``):
     scan + clean + construct the property graph. Returns (nodes, edges,
     stats) — stats is the G5 label/type histogram the reference prints."""
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    nodes, edges = build_nodes(tables), build_edges(tables)
+    nodes, edges = _graph(spark, sf_dir)
     return nodes, edges, graph_stats(nodes, edges)
 
 
@@ -40,8 +46,7 @@ def engineer_features(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame
     from .operators.degrees import degree_features
     from .operators.similarity import similarity_graph
 
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    nodes, edges = build_nodes(tables), build_edges(tables)
+    nodes, edges = _graph(spark, sf_dir)
     feats = degree_features(nodes, edges).filter(F.col("label") == "Customer")
 
     sim = similarity_graph(load_table(spark, "embeddings", sf_dir), k=k)

@@ -1,1 +1,1 @@
-from .build import build_edges, build_graph, build_nodes, graph_stats  # noqa: F401
+from .build import build_edges, build_nodes, graph_stats  # noqa: F401

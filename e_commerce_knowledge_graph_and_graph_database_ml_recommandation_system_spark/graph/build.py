@@ -31,8 +31,11 @@ any engine. At 100 TB the nodes/edges tables are written partitioned by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# the source tables build_nodes / build_edges read
+GRAPH_TABLES = ("customer", "orders", "lineitem", "part", "nation", "region")
 
 # dvid = 1 + orderkey % 5: five deterministic "injection batches"
 # mirroring the reference's dvid=1..5 incremental loads.
@@ -166,11 +169,6 @@ def build_edges(tables: dict[str, DataFrame]) -> DataFrame:
     )
 
     return purchased.unionByName(contains).unionByName(shipped).unionByName(belongs)
-
-
-def build_graph(tables: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
-    """Full graph build -> (nodes, edges)."""
-    return build_nodes(tables), build_edges(tables)
 
 
 def snapshot(df: DataFrame, dvid: int) -> DataFrame:

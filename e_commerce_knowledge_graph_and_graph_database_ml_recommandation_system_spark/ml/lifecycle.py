@@ -1,11 +1,9 @@
 """Model lifecycle operators (SURVEY §2.11 M3/M6/M7, §2.1 S6).
 
 M6 oversampling — the reference conditionally SMOTEs when imbalance > 5
-(``xgboost_training_for_big_data.py:571-581``). Two variants:
-``smote_oversample`` is the full semantics (euclidean-KNN interpolation,
-broadcast minority + one gemm per Arrow batch, deterministic md5-derived
-neighbor/λ choices); ``oversample_minority`` is the cheap
-with-replacement fallback.
+(``xgboost_training_for_big_data.py:571-581``). ``smote_oversample`` keeps
+those semantics: euclidean-KNN interpolation, broadcast minority + one gemm
+per Arrow batch, deterministic md5-derived neighbor/λ choices.
 
 M7 warm start — load-then-probe: the reference validates feature arity by
 predicting on a probe row before reusing a model
@@ -25,20 +23,6 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def oversample_minority(ds: DataFrame, label_col: str = "label", max_ratio: float = 5.0, seed: int = 42) -> DataFrame:
-    """M6: when neg/pos exceeds ``max_ratio``, resample the minority class
-    with replacement up to balance. One count + one sample-union; no-op when
-    balanced enough."""
-    counts = {r[label_col]: r["cnt"] for r in ds.groupBy(label_col).agg(F.count("*").alias("cnt")).collect()}
-    n_pos, n_neg = counts.get(1, 0), counts.get(0, 0)
-    if n_pos == 0 or n_neg / n_pos <= max_ratio:
-        return ds
-    extra_frac = (n_neg / max_ratio - n_pos) / n_pos
-    minority = ds.filter(F.col(label_col) == 1)
-    extra = minority.sample(withReplacement=True, fraction=float(extra_frac), seed=seed)
-    return ds.unionByName(extra)
 
 
 def smote_oversample(

@@ -230,7 +230,6 @@ def predict_multi_tower(df: DataFrame, params: dict, stats: dict, blocks: dict[s
     b_flat = sc.broadcast(flat)
     cols = [c for cs in blocks.values() for c in cs]
     scaled = apply_block_scalers(df, stats)
-    src_cols = scaled.columns
 
     def score(batches, _shapes=shapes, _blocks=blocks):
         for pdf in batches:

@@ -83,17 +83,6 @@ def knn_aggregates(sim_edges: DataFrame) -> DataFrame:
     )
 
 
-def target_rates(positives: DataFrame, n_customers_col: str, n_products: int) -> DataFrame:
-    """A9: per-customer positive rate = purchases / |products|.
-
-    Replaces the reference's O(|C|·|P|) membership loop
-    (``xgboost_training_for_big_data.py:185-199``) with one aggregate.
-    """
-    return positives.groupBy(F.col("customer_id").alias("id")).agg(
-        (F.count("*") / F.lit(n_products)).alias("target_rate")
-    )
-
-
 def kfold_target_encoding(
     df: DataFrame,
     key: str,

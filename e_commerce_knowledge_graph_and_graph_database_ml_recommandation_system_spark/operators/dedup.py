@@ -22,10 +22,10 @@ Scale design notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import md5_int32, normalize_text, word_ngrams, words
+from ..functions.text import md5_int32, normalize_text, words
 
 # MinHash permutation constants: a_i * h + b_i mod P (P = prime > 2^32).
 # a_i < 2^30 keeps a_i * h < 2^62 — no BIGINT overflow in any engine.

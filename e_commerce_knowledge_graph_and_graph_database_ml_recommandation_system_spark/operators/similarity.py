@@ -463,11 +463,12 @@ def _auto_rerank(n: int, n_cells: int, n_probe: int, floor: int = 60) -> int:
 #: #1): ``_auto_probes`` holds the probed fraction >= 1/16, which makes the
 #: default candidate volume ~n^2/16 — quadratic with small constants, the
 #: last quadratic public default in the package (measured 469.1 s at just
-#: 60k vectors, tools/ivf_auto_cost_probe.py). Capping expected per-query
-#: candidates at this budget converts total volume to <= n x 4096 — linear
-#: past the binding size (~65k vectors all-auto). 4096 matches the LSH
-#: path's target bucket size, so both approximate defaults bound per-query
-#: work at the same scale-independent constant.
+#: 60k vectors, SCALE.md row "the all-auto IVF-PQ default's PRICE TAG at
+#: 30×"). Capping expected per-query candidates at this budget converts
+#: total volume to <= n x 4096 — linear past the binding size (~65k
+#: vectors all-auto). 4096 matches the LSH path's target bucket size, so
+#: both approximate defaults bound per-query work at the same
+#: scale-independent constant.
 IVF_AUTO_MAX_CANDIDATES = 4096
 
 

@@ -19,22 +19,6 @@ import warnings
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Knuth multiplicative hash constant: deterministic pseudo-random selection
-# expressible in any SQL engine (no engine-specific hash()), so the DuckDB
-# oracle reproduces sampling exactly.
-_KNUTH = 2654435761
-
-
-def det_hash(col, modulus: int):
-    """Deterministic pseudo-random bucket in [0, modulus) from a BIGINT key.
-
-    The key is reduced mod 2^31-1 before the Knuth multiply so the product
-    stays under 2^63 — BIGINT overflow is undefined across engines (Spark
-    wraps, DuckDB raises), so the oracle must never hit it.
-    """
-    reduced = F.pmod(col.cast("long"), F.lit(2147483647))
-    return F.pmod(reduced * F.lit(_KNUTH), F.lit(modulus))
-
 
 def positive_pairs(edges: DataFrame) -> DataFrame:
     """J1: Customer→Order→Product 2-hop, dedup → (customer_id, product_id).
@@ -52,20 +36,6 @@ def positive_pairs(edges: DataFrame) -> DataFrame:
         .select("customer_id", "product_id")
         .distinct()
     )
-
-
-def positive_pairs_after(edges: DataFrame, cutoff: str) -> DataFrame:
-    """J3: temporally filtered 2-hop — only PURCHASED edges newer than cutoff
-    (reference ``Neural_network_multi_towered_training.py:330-375``).
-    The ts filter is applied before the join → pushed to the scan."""
-    purchased = (
-        edges.filter((F.col("type") == "PURCHASED") & (F.col("ts") > F.lit(cutoff)))
-        .select(F.col("src").alias("customer_id"), F.col("dst").alias("order_id"))
-    )
-    contains = edges.filter(F.col("type") == "CONTAINS").select(
-        F.col("src").alias("order_id"), F.col("dst").alias("product_id")
-    )
-    return purchased.join(contains, "order_id").select("customer_id", "product_id").distinct()
 
 
 def negative_pairs(edges: DataFrame, nodes: DataFrame, modulus: int = 50) -> DataFrame:
@@ -99,28 +69,6 @@ def negative_pairs(edges: DataFrame, nodes: DataFrame, modulus: int = 50) -> Dat
 
     pairs = customers.join(products, "bucket").select("customer_id", "product_id")
     return pairs.join(pos, ["customer_id", "product_id"], "left_anti")
-
-
-def purchased_exclusion_candidates(edges: DataFrame, nodes: DataFrame) -> DataFrame:
-    """J6+J7: candidate (customer, valid product) pairs excluding already-
-    purchased products (reference ``topk_recommandations_diverse_nodiscounts.py:
-    189-249``: validity filter + per-customer exclusion loop).
-
-    valid product = category/brand present and stock > 0 (P10).
-    """
-    customers = nodes.filter(F.col("label") == "Customer").select(F.col("id").alias("customer_id"))
-    valid_products = nodes.filter(
-        (F.col("label") == "Product")
-        & F.col("category").isNotNull()
-        & (F.col("category") != "")
-        & F.col("brand").isNotNull()
-        & (F.col("stock") > 0)
-    ).select(F.col("id").alias("product_id"), "category", "price")
-    pos = positive_pairs(edges)
-    return (
-        customers.crossJoin(valid_products)
-        .join(pos, ["customer_id", "product_id"], "left_anti")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,8 @@ Conventions for cross-engine hash parity:
 - every computed column aliased identically in Spark and SQL
 - doubles rounded to 6 dp on output (rounding is monotone, so orderings
   used for ranking never invert; summation-order ULP noise disappears)
-- all sampling is deterministic arithmetic (Knuth multiplicative hash),
+- all sampling is deterministic arithmetic (multiplicative hashes of
+  numeric keys),
   never engine RNG
 - ranking windows always carry a total deterministic ORDER BY (score desc,
   id asc)
@@ -19,7 +20,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..graph.build import build_edges, build_graph, build_nodes, graph_stats
+from ..graph.build import GRAPH_TABLES, build_edges
 from ..operators import aggregates as agg_ops
 from ..operators import degrees as deg_ops
 from ..operators import traversals as trav
@@ -135,13 +136,6 @@ nodes AS (
     FROM part
 )
 """
-
-
-GRAPH_TABLES = ("customer", "orders", "lineitem", "part", "nation", "region")
-
-
-def _graph(spark: SparkSession, sf_dir: str):
-    return build_graph(load_tables(spark, sf_dir, names=GRAPH_TABLES))
 
 
 def shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,10 +6,9 @@ sampling variants. Imported by plans/registry.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..graph.build import build_edges, build_nodes
 from ..operators import topk as tk
 from ..operators.degrees import community_degree_features, degree_histogram, node_degrees
 from ..sources.tables import load_tables
@@ -203,7 +202,6 @@ def q_feature_writeback(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback (reference ``update_features_after_every_fold.py:77-111``
     iterrows loop) — one left join + coalesce."""
     tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    edges = shared_edges(spark, sf_dir)
     features = tables["customer"].select(
         F.concat_ws("_", F.lit("cust"), F.col("c_custkey")).alias("node_id"),
         F.col("c_acctbal").alias("old_balance_feature"),

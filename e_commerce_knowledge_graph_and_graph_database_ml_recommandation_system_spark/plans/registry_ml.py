@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph import algorithms as alg
-from ..graph.build import build_edges
 from ..ml import als as als_mod
 from ..ml import link_prediction as lp
 from ..operators import multimodal as mm
@@ -534,7 +533,6 @@ def q_louvain_degree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the feature pipeline, ``xgboost_training_for_big_data.py:126-128``)."""
     from ..operators.degrees import community_degree_features
 
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
     deg = shared_node_degrees(spark, sf_dir)
     comm = alg.louvain(
         shared_sim_graph(spark, sf_dir),

@@ -16,10 +16,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..graph.build import build_edges
-from ..operators.degrees import node_degrees
 from ..sources.tables import load_tables
-from .registry import GRAPH_EDGES_CTE, GRAPH_TABLES, register, shared_edges, shared_node_degrees
+from .registry import GRAPH_EDGES_CTE, register, shared_edges, shared_node_degrees
 from .registry_relational import capped_basket
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_int32
-from ..graph.build import build_edges, build_nodes, snapshot
+from ..graph.build import build_nodes, snapshot
 from ..operators import traversals as trav
 from ..sources.tables import load_tables
 from ._memo import memo

@@ -75,9 +75,9 @@ def get_spark(app_name: str = "ekg-spark", shuffle_partitions: int | None = None
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
-        # UI off by default (test/bench hygiene); probes that read the
-        # REST status API (shuffle-byte accounting in
-        # tools/graph_scale_probe.py) opt in via the env var
+        # UI off by default (test/bench hygiene); callers that read the
+        # REST status API (perfbench's traced run sums per-layer stage
+        # counters from it) opt in via the env var
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI_ENABLED", "false"))
     )
     return builder.getOrCreate()

@@ -110,13 +110,6 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names=TABLES)
     return {name: load_table(spark, name, sf_dir) for name in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so ``spark.sql`` sees the same
-    names the DuckDB oracle does."""
-    for name in TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
-
-
 def load_csv_table(
     spark: SparkSession, path: str, schema=None, header: bool = True, sep: str = ","
 ) -> DataFrame:

@@ -375,16 +375,52 @@ def test_graphml_export(spark, tmp_path):
     """S3: exported GraphML parses and carries every node/edge."""
     import xml.etree.ElementTree as ET
 
-    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph.build import build_graph
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph.build import build_edges, build_nodes
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph.graphml import export_graphml
 
-    nodes, edges = build_graph(_tables(spark))
+    tables = _tables(spark)
+    nodes, edges = build_nodes(tables), build_edges(tables)
     path = str(tmp_path / "g.graphml")
     n = export_graphml(nodes.limit(50), edges.limit(50), path)
     tree = ET.parse(path)
     ns = "{http://graphml.graphdrawing.org/xmlns}"
     g = tree.getroot().find(f"{ns}graph")
     assert len(g.findall(f"{ns}node")) + len(g.findall(f"{ns}edge")) == n == 100
+
+
+def test_perfbench_layer_entry_points_resolve(monkeypatch):
+    """perfbench's traced refresh puts its layer spans around program entry
+    points by attribute. Every (module, attr) it names must resolve to a
+    callable, and the api's graph build must call build_nodes/build_edges
+    through the module globals that get wrapped, or graph_build reads 0."""
+    import dis
+    import importlib
+    import sys
+
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark import api
+
+    bench_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+    sys.path.insert(0, bench_dir)
+    try:
+        workloads = importlib.import_module("workloads")
+    finally:
+        sys.path.remove(bench_dir)
+    points = [p for ps in workloads.Refresh.layers.values() for p in ps]
+    assert ("api", "build_nodes") in points and ("api", "build_edges") in points
+    for mod_name, attr in points:
+        mod = importlib.import_module(f"{api.__package__}.{mod_name}")
+        assert callable(getattr(mod, attr, None)), (mod_name, attr)
+
+    # swap the module attributes the way the traced run does
+    calls = []
+    monkeypatch.setattr(api, "load_tables", lambda spark, sf_dir, names: dict.fromkeys(names))
+    monkeypatch.setattr(api, "build_nodes", lambda tables: calls.append("build_nodes") or "nodes")
+    monkeypatch.setattr(api, "build_edges", lambda tables: calls.append("build_edges") or "edges")
+    monkeypatch.setattr(api, "graph_stats", lambda nodes, edges: (nodes, edges))
+    assert api.ingest_and_build_graph(None, "sf") == ("nodes", "edges", ("nodes", "edges"))
+    assert calls == ["build_nodes", "build_edges"]
+    loaded = {i.argval for i in dis.get_instructions(api.engineer_features) if i.opname == "LOAD_GLOBAL"}
+    assert "_graph" in loaded
 
 
 def test_multimodal_decode_stub(spark):
@@ -844,20 +880,11 @@ def test_ivf_topk_recall(spark):
 
 
 def test_oversample_and_lifecycle(spark):
-    """M6/M7/S6: minority oversampling ratio bound, compat probe, history append."""
+    """M7/S6: compat probe, history append (M6 oversampling is
+    ``smote_oversample``, tested on its own)."""
     import tempfile, os
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import lifecycle as lc
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
-
-    ds = spark.range(1200).select(
-        F.col("id").alias("customer_id"),
-        F.col("id").alias("product_id"),
-        F.when(F.col("id") % 12 == 0, 1).otherwise(0).alias("label"),
-        (F.col("id") % 7).cast("double").alias("f1"),
-    )
-    over = lc.oversample_minority(ds, max_ratio=5.0, seed=1)
-    c = {r["label"]: r["cnt"] for r in over.groupBy("label").agg(F.count("*").alias("cnt")).collect()}
-    assert c[0] / c[1] < 7.0  # ratio pulled toward the 5.0 target
 
     tables = _tables(spark)
     full = lp.build_dataset(tables)

@@ -406,7 +406,7 @@ def test_stream_attribution_directory_source_multi_batch(spark, sf_dir, tmp_path
     file): range-partitioned-by-ts files with ascending mtimes streamed at
     maxFilesPerTrigger=1 must equal the batch interval join row-for-row —
     unified semantics while the watermark advances and evicts between
-    micro-batches (the streaming_scale_probe dataflow, CI-sized)."""
+    micro-batches (the 100× streaming probe's dataflow in SCALE.md, CI-sized)."""
     import os
 
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.sources.tables import load_table
