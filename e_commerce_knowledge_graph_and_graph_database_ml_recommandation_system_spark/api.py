@@ -3,10 +3,11 @@
 A reference user runs three kinds of scripts (SURVEY §3): ingest→graph
 (EP1), feature engineering (EP2), train→recommend (EP3). Each maps here to
 one function over the operator layer, so migration is `import` + one call
-per script instead of navigating the query registry. Everything returns
-lazy DataFrames where the semantics allow (model training is inherently an
-action); composition stays inside one Catalyst plan wherever the reference
-would have written a pickle between scripts.
+per script instead of navigating the query registry. EP1 and EP2 read the
+snapshot's one memoized property graph (``property_graph``); what they
+derive from it stays lazy where the semantics allow (model training is
+inherently an action); composition stays inside one Catalyst plan wherever
+the reference would have written a pickle between scripts.
 """
 
 from __future__ import annotations
@@ -15,41 +16,48 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .graph.build import GRAPH_TABLES, build_edges, build_nodes, graph_stats
+from .plans._memo import memo
 from .sources.tables import load_table, load_tables
 
 
-def _graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Scan the graph's source tables and build (nodes, edges). Calls
-    ``build_nodes`` / ``build_edges`` through this module's globals, so a
-    wrapper set on ``api.build_nodes`` / ``api.build_edges`` sees every
-    graph build."""
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    return build_nodes(tables), build_edges(tables)
+def property_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The snapshot's property graph (nodes, edges), built once per
+    (app, sf_dir) through ``plans._memo`` (lazy under ``_memo.disabled()``)
+    for EP1, EP2 and the registry. Calls ``build_nodes`` / ``build_edges``
+    through this module's globals, so a wrapper set on ``api.build_nodes``
+    / ``api.build_edges`` sees every graph build."""
+
+    def tables() -> dict[str, DataFrame]:
+        return load_tables(spark, sf_dir, names=GRAPH_TABLES)
+
+    nodes = memo(spark, ("graph_nodes", sf_dir), lambda: build_nodes(tables()))
+    edges = memo(spark, ("graph_edges", sf_dir), lambda: build_edges(tables()))
+    return nodes, edges
 
 
 def ingest_and_build_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     """EP1 (``First_Data_injection.py`` → ``knowledge_graph_creation.py``):
     scan + clean + construct the property graph. Returns (nodes, edges,
     stats) — stats is the G5 label/type histogram the reference prints."""
-    nodes, edges = _graph(spark, sf_dir)
+    nodes, edges = property_graph(spark, sf_dir)
     return nodes, edges, graph_stats(nodes, edges)
 
 
-def engineer_features(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+def engineer_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP2 (``degree_analysis`` + ``knn_similarity`` + ``Louvain`` +
     ``category_enrichement``): one customer-feature frame — degree features
-    (A1-A3/W1-W3), KNN-graph aggregates (X7+A7), Louvain community (X8) and
-    preferred category (X10+A5) — the attrs the reference writes back onto
-    nodes script by script, here as one joined DataFrame."""
+    (A1-A3/W1-W3), k=5 KNN-graph aggregates (X7+A7), Louvain community (X8)
+    and preferred category (X10+A5) — the attrs the reference writes back
+    onto nodes script by script, here as one joined DataFrame."""
     from .graph import algorithms as alg
     from .operators.aggregates import knn_aggregates, preferred_category
     from .operators.degrees import degree_features
-    from .operators.similarity import similarity_graph
+    from .plans.registry import shared_sim_graph
 
-    nodes, edges = _graph(spark, sf_dir)
+    nodes, edges = property_graph(spark, sf_dir)
     feats = degree_features(nodes, edges).filter(F.col("label") == "Customer")
 
-    sim = similarity_graph(load_table(spark, "embeddings", sf_dir), k=k)
+    sim = shared_sim_graph(spark, sf_dir)
     cust_id = F.concat_ws("_", F.lit("cust"), F.col("id")).alias("id")
     knn = knn_aggregates(sim).select(
         cust_id,

@@ -4,6 +4,8 @@ Several registry entries recompute identical heavyweight intermediates when
 invoked back-to-back in one verification run (the driver calls every
 ``queries()`` entry in a single process):
 
+- the property graph's nodes and edges (``api.property_graph``), the one
+  graph build that EP1, EP2 and every graph registry entry read;
 - ``random_walks`` / ``random_walks_flat`` / ``node2vec_embeddings`` all
   generate the SAME (num_walks=2, walk_len=6, seed=42) first-order walk set;
 - five ML queries each reassemble the pair dataset and refit a model.

@@ -20,7 +20,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..graph.build import GRAPH_TABLES, build_edges
+from ..api import property_graph
+from ..graph.build import GRAPH_TABLES
 from ..operators import aggregates as agg_ops
 from ..operators import degrees as deg_ops
 from ..operators import traversals as trav
@@ -138,24 +139,6 @@ nodes AS (
 """
 
 
-def shared_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The built property-graph edge relation, materialized once per
-    (app, sf_dir): ~20 registry entries (pagerank/PPR/HITS/LPA/k-core/
-    walks/degrees/...) consume the IDENTICAL build_edges output, and in a
-    single-process verification run each was re-deriving the 4-way
-    union-dedup from parquet. Semantics unchanged — same rows, same
-    schema; the memo just elides the repeated identical prefix (and
-    tools/plan_report captures plans with the memo disabled, so plan
-    audits still see the real edge-build dataflow)."""
-    from ._memo import memo
-
-    return memo(
-        spark,
-        ("graph_edges", sf_dir),
-        lambda: build_edges(load_tables(spark, sf_dir, names=GRAPH_TABLES)),
-    )
-
-
 def shared_sim_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The k=5 symmetrized KNN similarity graph over the embeddings table,
     materialized once per (app, sf_dir). Five registry entries
@@ -182,14 +165,15 @@ def shared_node_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature_writeback, louvain community features) each re-ran the
     explode+groupBy over the 920k-half-edge relation per run (r11). Node-
     count-sized output (18.5k rows at sf0.1); every consumer uses it as
-    the small/build side of a join or returns it directly. Same rows,
+    the small/build side of a join or returns it directly. Built over the
+    snapshot's property-graph edges (``api.property_graph``). Same rows,
     same schema; plan audits capture with the memo disabled."""
     from ._memo import memo
 
     return memo(
         spark,
         ("node_degrees", sf_dir),
-        lambda: deg_ops.node_degrees(shared_edges(spark, sf_dir)),
+        lambda: deg_ops.node_degrees(property_graph(spark, sf_dir)[1]),
     )
 
 
@@ -200,7 +184,7 @@ def shared_positive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IDENTICAL trav.positive_pair_keys output, and the linear sampler
     additionally reads it three times internally (draw seed, anti-join,
     target count). Same rows, same schema; plan audits capture with the
-    memo disabled (r10, the shared_edges pattern)."""
+    memo disabled (r10, the property-graph edges pattern)."""
     from ._memo import memo
 
     def build() -> DataFrame:
@@ -304,7 +288,7 @@ FROM o FULL OUTER JOIN i ON o.id = i.id
 """,
 )
 def q_in_out_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = shared_edges(spark, sf_dir)
+    _, edges = property_graph(spark, sf_dir)
     return deg_ops.in_out_degrees(edges)
 
 
@@ -651,7 +635,7 @@ GROUP BY src
 """,
 )
 def q_recency_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = shared_edges(spark, sf_dir)
+    _, edges = property_graph(spark, sf_dir)
     return agg_ops.recency_frequency(edges, "2000-01-01")
 
 

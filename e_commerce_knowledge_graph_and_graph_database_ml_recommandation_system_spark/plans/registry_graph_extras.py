@@ -9,10 +9,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..api import property_graph
 from ..operators import topk as tk
 from ..operators.degrees import community_degree_features, degree_histogram, node_degrees
-from ..sources.tables import load_tables
-from .registry import GRAPH_EDGES_CTE, GRAPH_TABLES, register, shared_edges, shared_node_degrees
+from ..sources.tables import load_table
+from .registry import GRAPH_EDGES_CTE, register, shared_node_degrees
 
 # ---------------------------------------------------------------------------
 # A2: global degree moments
@@ -34,7 +35,7 @@ FROM deg
 )
 def q_global_degree_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: mean/std over all degrees (reference ``degree_analysis.py:44-46``)."""
-    deg = node_degrees(shared_edges(spark, sf_dir))
+    deg = node_degrees(property_graph(spark, sf_dir)[1])
     return deg.agg(
         F.count("*").alias("n_nodes"),
         F.round(F.avg("degree"), 6).alias("mean_degree"),
@@ -60,7 +61,7 @@ FROM deg GROUP BY 1
 )
 def q_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: binned degree histogram (reference ``degree_analysis.py:155-165``)."""
-    edges = shared_edges(spark, sf_dir)
+    _, edges = property_graph(spark, sf_dir)
     return degree_histogram(edges, bin_width=5)
 
 
@@ -98,9 +99,8 @@ FROM d
 def q_community_degree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4+W2: per-community degree mean/std/z-score/percentile (reference
     ``degree_analysis.py:92-126``), with nation-segment communities."""
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
     deg = shared_node_degrees(spark, sf_dir)
-    members = tables["customer"].select(
+    members = load_table(spark, "customer", sf_dir).select(
         F.concat_ws("_", F.lit("cust"), F.col("c_custkey")).alias("id"),
         F.concat_ws("_", F.lit("seg"), F.col("c_nationkey")).alias("community_id"),
     )
@@ -149,7 +149,7 @@ def q_catalog_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G3: insert-or-update product attrs from a catalog batch (reference
     ``knowledge_graph_creation.py:141-166``: G.nodes[sku].update + insert-
     if-absent) — full-outer join + latest-wins coalesce, no mutation."""
-    part = load_tables(spark, sf_dir, names=("part",))["part"]
+    part = load_table(spark, "part", sf_dir)
     existing = part.filter(F.pmod("p_partkey", F.lit(2)) == 0).select(
         F.concat_ws("_", F.lit("prod"), F.col("p_partkey")).alias("id"),
         F.col("p_type").alias("category"),
@@ -201,8 +201,7 @@ def q_feature_writeback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9: update feature rows from graph node attrs with per-feature
     fallback (reference ``update_features_after_every_fold.py:77-111``
     iterrows loop) — one left join + coalesce."""
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    features = tables["customer"].select(
+    features = load_table(spark, "customer", sf_dir).select(
         F.concat_ws("_", F.lit("cust"), F.col("c_custkey")).alias("node_id"),
         F.col("c_acctbal").alias("old_balance_feature"),
         F.lit(-1).cast("long").alias("degree_feature"),
@@ -355,7 +354,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness gate; companion to label_propagation_communities)."""
     from ..graph.algorithms import pagerank
 
-    return pagerank(shared_edges(spark, sf_dir), iters=3)
+    return pagerank(property_graph(spark, sf_dir)[1], iters=3)
 
 
 # ---------------------------------------------------------------------------
@@ -419,11 +418,10 @@ def q_graph_ppr_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the unrolled decimal-exact oracle."""
     from ..graph.algorithms import personalized_pagerank
 
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    seeds = tables["customer"].filter(F.col("c_nationkey") == 7).select(
+    seeds = load_table(spark, "customer", sf_dir).filter(F.col("c_nationkey") == 7).select(
         F.concat_ws("_", F.lit("cust"), F.col("c_custkey")).alias("id")
     )
-    return personalized_pagerank(shared_edges(spark, sf_dir), seeds, iters=3)
+    return personalized_pagerank(property_graph(spark, sf_dir)[1], seeds, iters=3)
 
 
 def _hits_oracle_sql(iters: int = 4) -> str:
@@ -484,4 +482,4 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     personalized pagerank)."""
     from ..graph.algorithms import hits
 
-    return hits(shared_edges(spark, sf_dir), iters=3)
+    return hits(property_graph(spark, sf_dir)[1], iters=3)

@@ -11,7 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..api import property_graph
 from ..graph import algorithms as alg
+from ..graph.build import GRAPH_TABLES
 from ..ml import als as als_mod
 from ..ml import link_prediction as lp
 from ..operators import multimodal as mm
@@ -19,7 +21,7 @@ from ..operators import similarity as sim
 from ..operators.aggregates import knn_aggregates
 from ..sources.tables import load_table, load_tables
 from ._memo import memo
-from .registry import GRAPH_EDGES_CTE, GRAPH_TABLES, register, shared_edges, shared_node_degrees, shared_sim_graph
+from .registry import GRAPH_EDGES_CTE, register, shared_node_degrees, shared_sim_graph
 
 # ---------------------------------------------------------------------------
 # Shared heavyweight artifacts (one computation per process — VERDICT r3 #1/#2:
@@ -51,7 +53,7 @@ def _shared_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     form) and ``node2vec_embeddings`` — previously generated three times per
     verification run. Materialized once via localCheckpoint."""
     def build():
-        edges = shared_edges(spark, sf_dir)
+        _, edges = property_graph(spark, sf_dir)
         return alg.random_walks(edges, num_walks=1, walk_len=5, seed=42)
 
     return memo(spark, ("walks_n1_l5_s42", sf_dir), build)
@@ -353,7 +355,7 @@ def _lpa3_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     community_stats aggregates it, instead of two independent LPA runs
     per verification pass."""
     def build():
-        e = shared_edges(spark, sf_dir).filter(F.col("type").isin("PURCHASED", "CONTAINS"))
+        e = property_graph(spark, sf_dir)[1].filter(F.col("type").isin("PURCHASED", "CONTAINS"))
         return alg.label_propagation(e, max_iter=3)
 
     return memo(spark, ("lpa3_partition", sf_dir), build)
@@ -414,7 +416,7 @@ def _shared_landmark_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion per verification run instead of two."""
 
     def build():
-        edges = shared_edges(spark, sf_dir)
+        _, edges = property_graph(spark, sf_dir)
         e = edges.filter(F.col("type").isin("PURCHASED", "CONTAINS"))
         return alg.landmark_distances(e, n_landmarks=4, max_hops=4)
 
@@ -509,7 +511,7 @@ def q_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     CONTAINS projection — an iterative distributed graph algorithm with a
     full cross-engine hash oracle (unrolled peel rounds as chained CTEs,
     the label_propagation_communities pattern)."""
-    edges = shared_edges(spark, sf_dir)
+    _, edges = property_graph(spark, sf_dir)
     e = edges.filter(F.col("type").isin("PURCHASED", "CONTAINS"))
     return alg.kcore(e, k=3, rounds=4)
 
@@ -704,15 +706,12 @@ def q_graphml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..graph.build import build_nodes
     from ..graph.graphml import export_graphml, read_graphml
 
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    nodes = build_nodes(tables).select("id", "label", "dvid")
-    edges = shared_edges(spark, sf_dir).select("src", "dst", "type")
+    nodes, edges = property_graph(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="spark_graphml_")
     path = f"{tmp}/graph.graphml"
-    export_graphml(nodes, edges, path)
+    export_graphml(nodes.select("id", "label", "dvid"), edges.select("src", "dst", "type"), path)
     back_nodes, _back_edges = read_graphml(spark, path)
     out = back_nodes.localCheckpoint(eager=True)
     shutil.rmtree(tmp, ignore_errors=True)
@@ -1017,7 +1016,7 @@ def _shared_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_node2vec_biased_walks."""
     def build():
         return alg.node2vec_walks(
-            shared_edges(spark, sf_dir),
+            property_graph(spark, sf_dir)[1],
             num_walks=1, walk_len=3, p=1.0, q=0.5, seed=42, hash_fn="md5",
         )
 

@@ -16,8 +16,9 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..api import property_graph
 from ..sources.tables import load_tables
-from .registry import GRAPH_EDGES_CTE, register, shared_edges, shared_node_degrees
+from .registry import GRAPH_EDGES_CTE, register, shared_node_degrees
 from .registry_relational import capped_basket
 
 # ---------------------------------------------------------------------------
@@ -166,7 +167,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared memos while the pushdown recomputes five aggregates per
     # execution. Closed; do not re-try without removing the memo sharing
     # first.
-    edges = shared_edges(spark, sf_dir)
+    _, edges = property_graph(spark, sf_dir)
     deg = shared_node_degrees(spark, sf_dir)
     ends = (
         edges.select("src", "dst")

@@ -8,12 +8,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..api import property_graph
 from ..functions.text import md5_int32
-from ..graph.build import build_nodes, snapshot
+from ..graph.build import snapshot
 from ..operators import traversals as trav
 from ..sources.tables import load_tables
 from ._memo import memo
-from .registry import GRAPH_EDGES_CTE, GRAPH_TABLES, register, shared_edges, shared_positive_pairs
+from .registry import GRAPH_EDGES_CTE, register, shared_positive_pairs
 
 
 def capped_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -147,7 +148,7 @@ def q_dvid_snapshot_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference does after each injection (``second_third_and_forth_data_
     injection.py:120-124``); the predicate partition-prunes when edges are
     stored partitioned by dvid."""
-    edges = shared_edges(spark, sf_dir)
+    _, edges = property_graph(spark, sf_dir)
     return snapshot(edges, 3).groupBy("dvid", "type").agg(F.count("*").alias("cnt"))
 
 
@@ -504,8 +505,7 @@ def q_train_test_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1 stratified 80/20 split (deterministic hash buckets — per-label
     proportions hold in expectation like ``train_test_split(stratify=y)``)
     + A11 class-distribution diagnostics, as one grouped count."""
-    tables = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    nodes, edges = build_nodes(tables), shared_edges(spark, sf_dir)
+    nodes, edges = property_graph(spark, sf_dir)
     pos = trav.positive_pairs(edges).withColumn("label", F.lit(1))
     neg = trav.negative_pairs(edges, nodes).withColumn("label", F.lit(0))
     train = pos.unionByName(neg)
@@ -543,7 +543,7 @@ def q_inactive_node_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1: nodes whose most recent incident edge is older than 730 days
     (reference ``Node2vec_algorithm_inscripton.py:57-89``) — one exploded
     max-aggregate, no per-node loops."""
-    edges = shared_edges(spark, sf_dir)
+    _, edges = property_graph(spark, sf_dir)
     last_seen = (
         edges.filter(F.col("ts").isNotNull())
         .select(F.explode(F.array("src", "dst")).alias("id"), "ts")
@@ -573,7 +573,7 @@ def q_edge_dropout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Node2vec_algorithm_inscripton.py:94-121`` uses random.sample; here the
     md5-hash keeps it reproducible in any engine — the seeded-rand form is
     ``F.rand(seed) >= 0.15``)."""
-    edges = shared_edges(spark, sf_dir)
+    _, edges = property_graph(spark, sf_dir)
     keep = (F.col("dvid") != 1) | (
         F.pmod(md5_int32(F.concat_ws("|", "src", "dst", F.col("ts").cast("string"))), F.lit(100)) >= 15
     )

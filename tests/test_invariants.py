@@ -388,16 +388,22 @@ def test_graphml_export(spark, tmp_path):
     assert len(g.findall(f"{ns}node")) + len(g.findall(f"{ns}edge")) == n == 100
 
 
-def test_perfbench_layer_entry_points_resolve(monkeypatch):
+def test_perfbench_layer_entry_points_resolve(spark, monkeypatch, tmp_path):
     """perfbench's traced refresh puts its layer spans around program entry
     points by attribute. Every (module, attr) it names must resolve to a
     callable, and the api's graph build must call build_nodes/build_edges
-    through the module globals that get wrapped, or graph_build reads 0."""
+    through the module globals that get wrapped, or graph_build reads 0.
+    The graph is built once per snapshot: EP1, EP2 and a graph registry
+    entry on one sf_dir call each builder once, another sf_dir builds it
+    again."""
     import dis
     import importlib
+    import shutil
     import sys
 
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark import api
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph.build import GRAPH_TABLES
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo, registry
 
     bench_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
     sys.path.insert(0, bench_dir)
@@ -411,16 +417,35 @@ def test_perfbench_layer_entry_points_resolve(monkeypatch):
         mod = importlib.import_module(f"{api.__package__}.{mod_name}")
         assert callable(getattr(mod, attr, None)), (mod_name, attr)
 
-    # swap the module attributes the way the traced run does
+    # swap the module attributes the way the traced run does, with
+    # pass-through wrappers that count the calls
     calls = []
-    monkeypatch.setattr(api, "load_tables", lambda spark, sf_dir, names: dict.fromkeys(names))
-    monkeypatch.setattr(api, "build_nodes", lambda tables: calls.append("build_nodes") or "nodes")
-    monkeypatch.setattr(api, "build_edges", lambda tables: calls.append("build_edges") or "edges")
-    monkeypatch.setattr(api, "graph_stats", lambda nodes, edges: (nodes, edges))
-    assert api.ingest_and_build_graph(None, "sf") == ("nodes", "edges", ("nodes", "edges"))
+
+    def counting(name, fn):
+        def wrapper(tables):
+            calls.append(name)
+            return fn(tables)
+
+        return wrapper
+
+    monkeypatch.setattr(api, "build_nodes", counting("build_nodes", api.build_nodes))
+    monkeypatch.setattr(api, "build_edges", counting("build_edges", api.build_edges))
+    _memo.clear()
+    api.ingest_and_build_graph(spark, SF)
     assert calls == ["build_nodes", "build_edges"]
+    api.engineer_features(spark, SF)
+    registry.queries()["in_out_degrees"](spark, SF)
+    assert calls == ["build_nodes", "build_edges"], f"one snapshot's graph was built more than once: {calls}"
+
+    other = tmp_path / "snapshot"
+    other.mkdir()
+    for t in GRAPH_TABLES:
+        shutil.copy(f"{SF}/{t}.parquet", other / f"{t}.parquet")
+    api.ingest_and_build_graph(spark, str(other))
+    assert calls == ["build_nodes", "build_edges"] * 2, f"a second snapshot reused the first one's graph: {calls}"
+
     loaded = {i.argval for i in dis.get_instructions(api.engineer_features) if i.opname == "LOAD_GLOBAL"}
-    assert "_graph" in loaded
+    assert "property_graph" in loaded
 
 
 def test_multimodal_decode_stub(spark):

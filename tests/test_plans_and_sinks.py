@@ -301,8 +301,13 @@ def test_registry_contract_shape():
 
 def test_entry_point_facade(spark, sf_dir):
     """The three reference entry points (SURVEY §3 EP1-EP3) run end to end
-    through the facade and produce coherent shapes."""
+    through the facade and produce coherent shapes. EP1's stats and EP2's
+    features over the memoized property graph equal the unmemoized ones."""
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark import api
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo
+
+    def digest(df):
+        return sorted(map(repr, map(tuple, df.collect())))
 
     nodes, edges, stats = api.ingest_and_build_graph(spark, sf_dir)
     assert nodes.count() > 0 and edges.count() > 0
@@ -314,6 +319,10 @@ def test_entry_point_facade(spark, sf_dir):
     assert {"id", "degree", "knn_avg_similarity", "community_id", "preferred_category"} <= cols
     n = feats.count()
     assert n > 0 and feats.select("id").distinct().count() == n
+
+    with _memo.disabled():
+        assert digest(stats) == digest(api.ingest_and_build_graph(spark, sf_dir)[2])
+        assert digest(feats) == digest(api.engineer_features(spark, sf_dir))
 
     recs = api.train_and_recommend(spark, sf_dir)
     assert {"customer_id", "rank", "product_id"} <= set(recs.columns)
