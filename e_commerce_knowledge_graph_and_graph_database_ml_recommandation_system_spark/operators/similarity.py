@@ -30,6 +30,16 @@ def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
 
+def _vector_lit(v):
+    """A driver-side vector as ONE array<double> literal: a single py4j call
+    and one Literal node, where an array of per-element ``F.lit`` is a call
+    and an expression node per element. float64 maps to a Java double
+    exactly, so the values are the same."""
+    import numpy as np
+
+    return F.lit(np.asarray(v, dtype=np.float64))
+
+
 #: index sides up to this many rows take the broadcast brute-BLAS path
 #: (~50 MB at 64 float64 dims — a dim table); above it, LSH bucket joins.
 BRUTE_INDEX_MAX_ROWS = 100_000
@@ -379,7 +389,7 @@ def hyperplane_signs(
     for t in range(n_tables):
         bits = []
         for p in range(n_planes):
-            plane = F.array(*[F.lit(float(x)) for x in planes[t * n_planes + p]])
+            plane = _vector_lit(planes[t * n_planes + p])
             proj = F.aggregate(F.zip_with(v, plane, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
             bits.append(F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2 ** p))
         buckets.append(F.concat_ws("_", F.lit(t), sum(bits[1:], bits[0])))
@@ -699,7 +709,7 @@ def _hash_cell_ranked(
     cent_rows = src.orderBy("h", "vid").limit(n_cells).select("vid", "v").collect()
 
     centers_lit = F.array(*[
-        F.struct(F.lit(i).alias("cell"), F.array(*[F.lit(float(x)) for x in r["v"]]).alias("cv"))
+        F.struct(F.lit(i).alias("cell"), _vector_lit(r["v"]).alias("cv"))
         for i, r in enumerate(cent_rows)
     ])
 
@@ -953,7 +963,7 @@ def ivf_topk(
 
     # query side: n_probe nearest centers via literal center arrays
     centers_lit = F.array(*[
-        F.struct(F.lit(i).alias("cell"), F.array(*[F.lit(float(x)) for x in c]).alias("cv"))
+        F.struct(F.lit(i).alias("cell"), _vector_lit(c).alias("cv"))
         for i, c in enumerate(centers)
     ])
     probed = (

@@ -44,9 +44,14 @@ def driver_memory() -> str:
 def get_spark(app_name: str = "ekg-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
-    ``shuffle_partitions`` defaults to the local core count; on a real
-    cluster it should be ~2-3x total executor cores (set via submit conf,
-    which wins because we only set defaults here when absent).
+    ``shuffle_partitions`` defaults to ``SPARK_GRAFT_CPUS``; on a real
+    cluster pass ~2-3x total executor cores. Every key set below is set
+    unconditionally, and builder values override the launcher's
+    (``spark-submit --conf``, ``PYSPARK_SUBMIT_ARGS``): a submit conf of
+    ``spark.sql.shuffle.partitions`` does not reach the session, so this
+    argument is the one way to change it. The codegen cache size is fixed
+    the same way. Only the master is left to the launcher when it names
+    one.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -75,6 +80,17 @@ def get_spark(app_name: str = "ekg-spark", shuffle_partitions: int | None = None
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
+        # generated-class cache, sized to hold a refresh op's working set.
+        # One refresh op (EP1-EP4 at perfbench's sf0.01 refresh) generates
+        # ~370 distinct whole-stage classes; Spark's default of 100 entries
+        # evicted each op's classes before the next op ran, so every warm
+        # op recompiled ~370 of them (10-14 ms of Janino each). Warm
+        # compiles per op, measured: 100 -> ~371, 256 -> ~330 (the working
+        # set still does not fit), 512 -> 2-38 but rising again (29/28/37)
+        # by the sixth op, once the classes a run accumulates (~370 plus
+        # each op's new plan variants and a traced op's ~80) pass 512;
+        # 1024 -> 0-20 over ten ops. Static: fixed when the JVM starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # UI off by default (test/bench hygiene); callers that read the
         # REST status API (perfbench's traced run sums per-layer stage
         # counters from it) opt in via the env var

@@ -2754,3 +2754,33 @@ def test_driver_memory_default_follows_host(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     monkeypatch.setattr(session, "_host_memory_mb", lambda: 15 * 1024)
     assert session.driver_memory() == "3g"
+
+
+def test_warm_refresh_reuses_generated_code(spark, sf_dir):
+    """A warm refresh pass reuses the classes the previous pass compiled:
+    the codegen cache holds a refresh op's working set (EP1–EP4, each
+    drained), so after the memo is cleared the same plans find their
+    generated code cached instead of paying a Janino compile each. With
+    Spark's default 100-entry cache every pass evicted the last one's
+    classes and compiled about as many as the first."""
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark import api
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo, registry
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    qs = registry.queries()
+
+    def refresh_pass() -> int:
+        _memo.clear()
+        before = compiles.getCount()
+        for df in (
+            api.ingest_and_build_graph(spark, sf_dir)[2],
+            api.engineer_features(spark, sf_dir),
+            qs["kfold_target_encoding"](spark, sf_dir),
+            qs["flagship_diverse_topk"](spark, sf_dir),
+            api.curate_corpus(spark, sf_dir),
+        ):
+            df.write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    counts = [refresh_pass() for _ in range(3)]
+    assert counts[2] * 4 < counts[0], f"classes compiled per refresh pass: {counts}"
