@@ -23,7 +23,8 @@ from .sources.tables import load_table, load_tables
 def property_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The snapshot's property graph (nodes, edges), built once per
     (app, sf_dir) through ``plans._memo`` (lazy under ``_memo.disabled()``)
-    for EP1, EP2 and the registry. Calls ``build_nodes`` / ``build_edges``
+    for EP1, EP2, the registry and the ML pair dataset; no other package
+    code builds a graph. Calls ``build_nodes`` / ``build_edges``
     through this module's globals, so a wrapper set on ``api.build_nodes``
     / ``api.build_edges`` sees every graph build."""
 

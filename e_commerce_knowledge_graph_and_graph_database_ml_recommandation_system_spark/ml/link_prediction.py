@@ -16,14 +16,15 @@ Spark-first version:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..api import property_graph
 from ..functions.text import md5_int32
-from ..graph.build import build_edges, build_nodes
 from ..operators import traversals as trav
 from ..operators.aggregates import kfold_target_encoding, recency_frequency
 from ..operators.degrees import degree_features
+from ..sources.tables import load_tables
 
 #: bump when the GBT trainer's persisted model/feature assembly changes
 #: (r10): folded into the gbt store tag via recsys_store.versioned_tag.
@@ -48,8 +49,10 @@ FEATURE_COLS = [
 ]
 
 
-def build_dataset(tables: dict, target_encode: bool = True) -> DataFrame:
-    """Assemble the labeled (customer, product) training table.
+def build_dataset(spark: SparkSession, sf_dir: str, target_encode: bool = True) -> DataFrame:
+    """Assemble the labeled (customer, product) training table over the
+    snapshot's property graph (``api.property_graph``) and its positive-pair
+    relation (``registry.shared_positive_pairs``).
 
     Broadcast feature joins (J5: the reference probes per-pair with a
     pandas scan, ``xgboost_model_training.py:163-167``); one wide row per
@@ -59,10 +62,15 @@ def build_dataset(tables: dict, target_encode: bool = True) -> DataFrame:
     pipeline can fit the encoding on the TRAIN partition only after the
     split (see split_safe_target_encoding — the full-dataset encoding
     leaks test labels into training features)."""
-    nodes, edges = build_nodes(tables), build_edges(tables)
-    pos = trav.positive_pairs(edges).withColumn("label", F.lit(1))
-    neg = trav.negative_pairs(edges, nodes).withColumn("label", F.lit(0))
-    pairs = pos.unionByName(neg)
+    # the registry imports this module (registry_ml), so import it here
+    from ..plans.registry import shared_positive_pairs
+
+    nodes, edges = property_graph(spark, sf_dir)
+    t = load_tables(spark, sf_dir, names=("customer", "part"))
+    shared_pos = shared_positive_pairs(spark, sf_dir)
+    pos = shared_pos.withColumn("label", F.lit(1))
+    neg = trav.negative_pair_keys(shared_pos, t["customer"], t["part"]).withColumn("label", F.lit(0))
+    pairs = trav.pair_ids(pos.unionByName(neg))
 
     degf = degree_features(nodes, edges)
     cust_f = degf.filter(F.col("label") == "Customer").select(
@@ -109,7 +117,7 @@ def build_dataset(tables: dict, target_encode: bool = True) -> DataFrame:
     # preferred_category onto customers, consumed as a match feature): how
     # many of this customer's purchases fall in the candidate's category
     cust_cat = (
-        trav.positive_pairs(edges)
+        trav.pair_ids(shared_pos)
         .join(F.broadcast(prod_attrs.select("product_id", "category")), "product_id")
         .groupBy("customer_id", "category")
         .agg(F.count("*").alias("cust_cat_count"))
@@ -276,18 +284,13 @@ def drift_alert(current_auc: float, previous_auc: float | None, tol: float = 0.0
     return previous_auc is not None and (previous_auc - current_auc) > tol
 
 
-def fit_artifacts(
-    tables: dict | None,
-    max_iter: int = 20,
-    materialize: bool = False,
-    ds: DataFrame | None = None,
-    model=None,
-) -> dict:
-    """Shared M1→M5 prefix: dataset assembly, deterministic hash split,
-    leakage-safe target encoding, the SMOTE imbalance gate, weighted GBT
-    fit. Returned dict {ds, train, test, model, assembler} is the single
-    fit that the metric / feature-importance / model-scoring registry
-    queries all consume (one fit per process instead of one per query).
+def fit_artifacts(ds: DataFrame, max_iter: int = 20, materialize: bool = False, model=None) -> dict:
+    """Shared M1→M5 prefix over an assembled ``build_dataset(...,
+    target_encode=False)`` table: deterministic hash split, leakage-safe
+    target encoding, the SMOTE imbalance gate, weighted GBT fit. Returned
+    dict {ds, train, test, model, assembler} is the single fit that the
+    metric / feature-importance / model-scoring registry queries all
+    consume (one fit per process instead of one per query).
 
     ``materialize=True`` localCheckpoints train/test before the fit —
     boosting scans the training table once per tree, so paying one eager
@@ -296,11 +299,6 @@ def fit_artifacts(
     parquet before training, which is what a 100-TB pipeline does)."""
     from .lifecycle import smote_oversample
 
-    # ``ds``: an already-assembled target_encode=False dataset (the registry
-    # passes its memoized copy so the multitower/GBT consumers share ONE
-    # assembly per process)
-    if ds is None:
-        ds = build_dataset(tables, target_encode=False).cache()
     train, test = split_train_test(ds)
     train_enc, test = split_safe_target_encoding(train, test)
     # reference gates SMOTE on imbalance > 5 (xgboost_training_for_big_data
@@ -340,18 +338,17 @@ def fit_artifacts(
     }
 
 
-def run_pipeline(tables: dict | None, max_iter: int = 20, artifacts: dict | None = None) -> DataFrame:
-    """End-to-end M1→M9: returns a (metric, value) DataFrame (one row per
-    metric, train and val). Split FIRST, then fit the target encoding on
-    train only (split_safe_target_encoding) — no test label ever reaches a
-    training feature. rounds_used reports how many boosting rounds early
-    stopping kept. Pass ``artifacts`` (from fit_artifacts) to reuse an
-    existing fit."""
-    art = artifacts if artifacts is not None else fit_artifacts(tables, max_iter=max_iter)
-    model, assembler = art["model"], art["assembler"]
-    m_train = evaluate(model, assembler, art["train"])
-    m_val = evaluate(model, assembler, art["test"])
-    spark = art["ds"].sparkSession
+def run_pipeline(artifacts: dict) -> DataFrame:
+    """M8/M9 over a ``fit_artifacts`` fit (M1→M5): returns a (metric,
+    value) DataFrame (one row per metric, train and val). The fit splits
+    FIRST, then fits the target encoding on train only
+    (split_safe_target_encoding) — no test label ever reaches a training
+    feature. rounds_used reports how many boosting rounds early stopping
+    kept."""
+    model, assembler = artifacts["model"], artifacts["assembler"]
+    m_train = evaluate(model, assembler, artifacts["train"])
+    m_val = evaluate(model, assembler, artifacts["test"])
+    spark = artifacts["ds"].sparkSession
     rows = [("train_" + k, float(v)) for k, v in m_train.items()] + [
         ("val_" + k, float(v)) for k, v in m_val.items()
     ]

@@ -66,9 +66,8 @@ def degree_features(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
 
 def degree_feature_stats(d: DataFrame) -> DataFrame:
-    """W1-W3 statistics layer over a prepared (id, label, degree) frame —
-    shared by the generic explode path (degree_features) and source-pushdown
-    degree derivations (plans/registry.q_degree_features)."""
+    """W1-W3 statistics layer of ``degree_features`` over a prepared
+    (id, label, degree) frame."""
     # tiny histogram of (label, degree). Deliberately NOT checkpointed
     # (r11 optimization round, measured): the stats consumers look
     # like repeated subtree evaluations, but AQE's ReusedExchange dedupes

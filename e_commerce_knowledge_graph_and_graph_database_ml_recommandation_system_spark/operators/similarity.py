@@ -220,30 +220,24 @@ def embedding_near_dup(
 
 
 def _near_dup_blas(emb: DataFrame, threshold: float, id_col: str, vec_col: str) -> DataFrame:
-    """Exact near-dup via the brute_topk_blas strategy: broadcast raw
-    matrix + norms, one gemm per Arrow batch, emit (a<b, cos>=t) pairs.
-    Cosine in DuckDB list_cosine_similarity operation order."""
+    """Exact near-dup via the brute_topk_blas strategy: the broadcast
+    ``brute_index`` (raw matrix + norms), one gemm per Arrow batch, emit
+    (a<b, cos>=t) pairs. Cosine in DuckDB list_cosine_similarity operation
+    order."""
     import numpy as np
     import pandas as pd
 
     spark = emb.sparkSession
-    local = emb.select(id_col, _as_double(F.col(vec_col)).alias("v")).toPandas()
-    ids = local[id_col].to_numpy()
-    mat = np.stack(local["v"].to_numpy())
-    norms = np.linalg.norm(mat, axis=1)
-    norms = np.where(norms == 0, 1.0, norms)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat)
-    b_norms = spark.sparkContext.broadcast(norms)
+    index = brute_index(emb, id_col, vec_col)
 
     def batches(it):
         for pdf in it:
-            ids_l = b_ids.value
+            ids_l, mat, norms = index.value
             q = np.stack(pdf["v"].to_numpy())
             qn = np.linalg.norm(q, axis=1)
             qn = np.where(qn == 0, 1.0, qn)
             qids = pdf[id_col].to_numpy()
-            sims = np.round((q @ b_mat.value.T) / np.outer(qn, b_norms.value), 6)
+            sims = np.round((q @ mat.T) / np.outer(qn, norms), 6)
             qi, ni = np.where((ids_l[None, :] > qids[:, None]) & (sims >= threshold))
             yield pd.DataFrame(
                 {"vec_a": qids[qi], "vec_b": ids_l[ni], "cosine": sims[qi, ni]}

@@ -3,8 +3,9 @@
 The reference walks edges imperatively (``xgboost_model_training.py:85-141``,
 ``topk_recommandations_diverse_nodiscounts.py:217-249``). Every traversal here
 is an equi-join on edge endpoints so Catalyst picks the physical strategy
-(shuffle-hash / sort-merge; broadcast when a side is a dim). 2-hop =
-self-join of the edges table on the shared Order endpoint.
+(shuffle-hash / sort-merge; broadcast when a side is a dim). The
+Customer→Order→Product 2-hop joins the edges' sources on the shared Order
+key: PURCHASED comes from orders, CONTAINS from lineitem.
 
 Scale notes: the PURCHASED⋈CONTAINS join keys on order id — uniformly
 distributed, shuffle-partitioned, no skew. Candidate generation avoids a
@@ -20,73 +21,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def positive_pairs(edges: DataFrame) -> DataFrame:
-    """J1: Customer→Order→Product 2-hop, dedup → (customer_id, product_id).
-
-    reference: ``xgboost_model_training.py:85-103`` (nested edge scans).
-    """
-    purchased = edges.filter(F.col("type") == "PURCHASED").select(
-        F.col("src").alias("customer_id"), F.col("dst").alias("order_id")
-    )
-    contains = edges.filter(F.col("type") == "CONTAINS").select(
-        F.col("src").alias("order_id"), F.col("dst").alias("product_id")
-    )
-    return (
-        purchased.join(contains, "order_id")
-        .select("customer_id", "product_id")
-        .distinct()
-    )
-
-
-def negative_pairs(edges: DataFrame, nodes: DataFrame, modulus: int = 50) -> DataFrame:
-    """J4: negative sampling — (customer, product) pairs NOT purchased.
-
-    The reference draws random pairs and rejects hits
-    (``xgboost_model_training.py:124-141``; target ratio ~1:1 with
-    positives). Distributed + reproducible version: deterministic-hash-select
-    a subset of the cross space on the NUMERIC node keys (the id strings are
-    built only for surviving rows — string work on |C|·|P| rows dominated
-    the old plan), then one LEFT ANTI join against positives. No rejection
-    loop, no driver round trips.
-
-    modulus=50 yields ≈1:1 with positives at the testdata shape; scale it
-    with |C|·|P| / |positives| to hold the reference's 1:1 target.
-    """
-    customers = nodes.filter(F.col("label") == "Customer").select(
-        F.col("id").alias("customer_id"),
-        # (131·c + 7919·p) % m == 0  ⟺  (131·c) % m == (−7919·p) % m:
-        # the selection predicate becomes an EQUI-JOIN key, so the sampled
-        # pair set materializes directly (|C|·|P|/m rows) without ever
-        # evaluating the |C|·|P| cross space — the crossJoin+filter form
-        # burned ~300M row evaluations at sf0.1 for the same output
-        F.pmod(F.col("key") * F.lit(131), F.lit(modulus)).alias("bucket"),
-    )
-    products = nodes.filter(F.col("label") == "Product").select(
-        F.col("id").alias("product_id"),
-        F.pmod(F.lit(modulus) - F.pmod(F.col("key") * F.lit(7919), F.lit(modulus)), F.lit(modulus)).alias("bucket"),
-    )
-    pos = positive_pairs(edges)
-
-    pairs = customers.join(products, "bucket").select("customer_id", "product_id")
-    return pairs.join(pos, ["customer_id", "product_id"], "left_anti")
-
-
 # ---------------------------------------------------------------------------
-# numeric-key fast paths (late string materialization)
+# J1/J3/J4 run on the numeric keys (late string materialization)
 #
 # build_edges derives every node id injectively from a numeric key
-# (graph/build.py: 'cust_<k>', 'order_<k>', 'prod_<k>'), so traversals can
-# run entirely on the raw longs and concat display ids AFTER the reducing
-# shuffle — the shuffle then carries 8-byte keys instead of ~15-byte
-# strings and the concat runs post-shuffle in parallel. This is the 100-TB
-# posture for every id-heavy reduction; the string-edge operators above
-# stay as the generic graph API (identical output, oracle-enforced).
+# (graph/build.py: 'cust_<k>', 'order_<k>', 'prod_<k>'), so the pair
+# traversals run entirely on the raw longs and concat display ids AFTER the
+# reducing shuffle (``pair_ids``) — the shuffle then carries 8-byte keys
+# instead of ~15-byte strings and the concat runs post-shuffle in parallel.
 # ---------------------------------------------------------------------------
 
 
 def positive_pair_keys(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
-    """J1 on raw keys: PURCHASED⋈CONTAINS on the order endpoint ≡
-    orders⋈lineitem on the order key. Columns (ckey, pkey), distinct."""
+    """J1: Customer→Order→Product 2-hop on raw keys (reference
+    ``xgboost_model_training.py:85-103``, nested edge scans):
+    PURCHASED⋈CONTAINS on the order endpoint ≡ orders⋈lineitem on the
+    order key. Columns (ckey, pkey), distinct."""
     return (
         orders.select("o_orderkey", "o_custkey")
         .join(lineitem.select("l_orderkey", "l_partkey"), F.col("o_orderkey") == F.col("l_orderkey"))
@@ -108,19 +58,23 @@ def positive_pair_keys_after(orders: DataFrame, lineitem: DataFrame, cutoff: str
 
 
 def negative_pair_keys(
-    orders: DataFrame,
-    lineitem: DataFrame,
-    customer: DataFrame,
-    part: DataFrame,
-    modulus: int = 50,
-    pos: DataFrame | None = None,
+    pos: DataFrame, customer: DataFrame, part: DataFrame, modulus: int = 50
 ) -> DataFrame:
-    """J4 on raw keys — same modular-bucket equi-join sample and anti-join
-    as negative_pairs, minus the string ids until the very end. The part
-    side is a dim → broadcast hint, and customers repartition to cores
-    first: the bucket key has only `modulus` distinct values, so a shuffle
-    join would cap parallelism at `modulus` tasks (and a single-row-group
-    scan at 1)."""
+    """J4: negative sampling — (customer, product) pairs NOT in ``pos``, the
+    (ckey, pkey) positive-pair relation.
+
+    The reference draws random pairs and rejects hits
+    (``xgboost_model_training.py:124-141``; target ratio ~1:1 with
+    positives). Distributed + reproducible version: deterministic-hash-
+    select a 1/modulus subset of the cross space, then one LEFT ANTI join
+    against positives. (131·c + 7919·p) % m == 0 ⟺ (131·c) % m ==
+    (−7919·p) % m, so the selection predicate is an EQUI-JOIN key and the
+    sampled pairs materialize directly without evaluating the |C|·|P|
+    cross space. modulus=50 yields ≈1:1 with positives at the testdata
+    shape. The part side is a dim → broadcast hint, and customers
+    repartition to cores first: the bucket key has only `modulus` distinct
+    values, so a shuffle join would cap parallelism at `modulus` tasks
+    (and a single-row-group scan at 1)."""
     spark = customer.sparkSession
     customers = customer.select(
         F.col("c_custkey").alias("ckey"),
@@ -133,14 +87,7 @@ def negative_pair_keys(
         ).alias("bucket"),
     )
     pairs = customers.join(F.broadcast(products), "bucket").select("ckey", "pkey")
-    # ``pos`` (optional): a pre-built positive-pair relation — the registry
-    # passes its memo-shared checkpoint so four consumers derive the
-    # join+distinct once per process
-    return pairs.join(
-        pos if pos is not None else positive_pair_keys(orders, lineitem),
-        ["ckey", "pkey"],
-        "left_anti",
-    )
+    return pairs.join(pos, ["ckey", "pkey"], "left_anti")
 
 
 def _sel_keyed(df: DataFrame) -> DataFrame:

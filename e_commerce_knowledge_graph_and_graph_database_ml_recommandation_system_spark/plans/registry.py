@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..api import property_graph
-from ..graph.build import GRAPH_TABLES
+from ..graph.build import GRAPH_TABLES, graph_stats
 from ..operators import aggregates as agg_ops
 from ..operators import degrees as deg_ops
 from ..operators import traversals as trav
@@ -178,13 +178,14 @@ def shared_node_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_positive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The distinct (ckey, pkey) positive-pair relation, checkpointed once
-    per (app, sf_dir): four registry entries (positive_pairs,
-    negative_pairs, negative_pairs_linear, kfold_target_encoding) consume
-    the IDENTICAL trav.positive_pair_keys output, and the linear sampler
-    additionally reads it three times internally (draw seed, anti-join,
-    target count). Same rows, same schema; plan audits capture with the
-    memo disabled (r10, the property-graph edges pattern)."""
+    """The snapshot's one distinct (ckey, pkey) positive-pair relation
+    (J1), checkpointed once per (app, sf_dir). Every pair consumer reads
+    it: the positive/negative pair entries, kfold_target_encoding,
+    train_test_split_stats, threshold_sweep, the flagship, the purchase
+    baskets and the ML pair dataset (``lp.build_dataset``); the linear
+    sampler additionally reads it three times internally (draw seed,
+    anti-join, target count). Same rows, same schema; plan audits capture
+    with the memo disabled."""
     from ._memo import memo
 
     def build() -> DataFrame:
@@ -220,40 +221,7 @@ SELECT 'edge', type, COUNT(*) FROM edges GROUP BY type
 """,
 )
 def q_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # count-pushdown fast path of graph_stats (G5): every histogram bucket
-    # is a count over the SOURCE of that label/type, mirroring build_nodes/
-    # build_edges construction (including the Location join and the
-    # Category/BELONGS_TO dedups) without materializing a single node or
-    # edge row — plain-table counts come from parquet metadata, the two
-    # dedup counts are dim-sized aggregates. One unioned plan, one job.
-    t = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-
-    def cnt(df: DataFrame, kind: str, key: str) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("cnt")).select(
-            F.lit(kind).alias("kind"), F.lit(key).alias("key"), "cnt"
-        )
-
-    nation, region = t["nation"], t["region"]
-    loc_src = nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    ship_src = t["orders"].join(
-        F.broadcast(t["customer"].select("c_custkey")),
-        t["orders"].o_custkey == F.col("c_custkey"),
-    )
-    parts = [
-        cnt(t["customer"], "node", "Customer"),
-        cnt(t["part"], "node", "Product"),
-        cnt(t["orders"], "node", "Order"),
-        cnt(loc_src, "node", "Location"),
-        cnt(t["part"].select("p_type").distinct(), "node", "Category"),
-        cnt(t["orders"], "edge", "PURCHASED"),
-        cnt(t["lineitem"], "edge", "CONTAINS"),
-        cnt(ship_src, "edge", "SHIPPED_TO"),
-        cnt(t["part"].select("p_partkey", "p_type").distinct(), "edge", "BELONGS_TO"),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return graph_stats(*property_graph(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -318,102 +286,7 @@ FROM d
 """,
 )
 def q_degree_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # source-pushdown degree derivation: each label's undirected degree is
-    # a per-key aggregate over the tables its edges come from (PURCHASED/
-    # SHIPPED_TO: orders, CONTAINS: lineitem, BELONGS_TO: part) — the
-    # aggregate-through-union rewrite of node_degrees' half-edge explode
-    # (920k string rows at sf0.1; string ids blocked Catalyst from doing
-    # this pushdown itself). Ids concat AFTER the per-key aggregates; the
-    # W1-W3 statistics layer (deg_ops.degree_feature_stats) is shared with
-    # the generic path, whose explode form remains the arbitrary-graph API.
-    t = load_tables(spark, sf_dir, names=GRAPH_TABLES)
-    cust, orders, li, part = t["customer"], t["orders"], t["lineitem"], t["part"]
-    nation, region = t["nation"], t["region"]
-
-    # r12 (§2.4 one exchange where five were; §5 fewer job barriers): the
-    # old assembly computed FIVE per-label degree aggregates (each its own
-    # exchange) and re-attached them to the node tables through five
-    # left joins (each its own broadcast-build job) — ~25 sub-250 ms
-    # stages whose wall was scheduling latency, not compute (r12 profile:
-    # <1 s total executor time under a >2 s wall). Every per-label degree
-    # is a SUM over half-edge/offset rows, so ONE union of narrow
-    # (tag, key, weight) rows + ONE groupBy computes all five degree
-    # relations — node-presence rows carry the left-join zero/+1 offsets
-    # (customer w=0; order w=1+ship; product w=1 BELONGS_TO; location
-    # w=0; category w=1 per part = the old count). Key sets are identical
-    # under the source tables' referential integrity (every l_orderkey is
-    # an order, every o_custkey a customer, every c_nationkey a nation —
-    # the same FK contract the edge CTE itself assumes).
-    lngN = F.lit(None).cast("long")
-    strN = F.lit(None).cast("string")
-
-    def he(df, tag, kl, w):
-        return df.select(
-            F.lit(tag).alias("tag"),
-            kl.cast("long").alias("kl"),
-            strN.alias("ks"),
-            w.alias("w"),
-        )
-
-    # an order's SHIPPED_TO edge exists iff its customer row exists
-    has_cust = (
-        cust.select(F.col("c_custkey").alias("o_custkey")).distinct().withColumn("ship", F.lit(1))
-    )
-    order_cust = orders.join(
-        F.broadcast(cust.select("c_custkey", "c_nationkey")),
-        orders.o_custkey == F.col("c_custkey"),
-    )
-    rows = (
-        he(orders, 0, F.col("o_custkey"), F.lit(1))  # PURCHASED per order
-        .unionByName(he(cust, 0, F.col("c_custkey"), F.lit(0)))  # customer presence
-        .unionByName(
-            he(
-                orders.join(F.broadcast(has_cust), "o_custkey", "left"),
-                1,
-                F.col("o_orderkey"),
-                F.lit(1) + F.coalesce("ship", F.lit(0)),
-            )
-        )  # order presence (+PURCHASED +SHIPPED_TO ends)
-        .unionByName(he(li, 1, F.col("l_orderkey"), F.lit(1)))  # CONTAINS per lineitem
-        .unionByName(he(li, 2, F.col("l_partkey"), F.lit(1)))  # CONTAINS per lineitem
-        .unionByName(he(part, 2, F.col("p_partkey"), F.lit(1)))  # product presence (+BELONGS_TO)
-        .unionByName(he(order_cust, 3, F.col("c_nationkey"), F.lit(1)))  # SHIPPED_TO per order
-        .unionByName(
-            he(
-                nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey),
-                3,
-                F.col("n_nationkey"),
-                F.lit(0),
-            )
-        )  # location presence
-        .unionByName(
-            part.select(
-                F.lit(4).alias("tag"), lngN.alias("kl"), F.col("p_type").alias("ks"), F.lit(1).alias("w")
-            )
-        )  # BELONGS_TO per part = category degree
-    )
-    deg = rows.groupBy("tag", "kl", "ks").agg(F.sum("w").alias("degree"))
-    tag = F.col("tag")
-    prefix = (
-        F.when(tag == 0, "cust")
-        .when(tag == 1, "order")
-        .when(tag == 2, "prod")
-        .when(tag == 3, "loc")
-        .otherwise("cat")
-    )
-    label = (
-        F.when(tag == 0, "Customer")
-        .when(tag == 1, "Order")
-        .when(tag == 2, "Product")
-        .when(tag == 3, "Location")
-        .otherwise("Category")
-    )
-    d = deg.select(
-        F.concat_ws("_", prefix, F.coalesce(F.col("kl").cast("string"), F.col("ks"))).alias("id"),
-        label.alias("label"),
-        F.col("degree"),
-    )
-    df = deg_ops.degree_feature_stats(d)
+    df = deg_ops.degree_features(*property_graph(spark, sf_dir))
     return df.select(
         "id",
         "label",
@@ -440,9 +313,9 @@ WHERE p.type = 'PURCHASED' AND c.type = 'CONTAINS'
 """,
 )
 def q_positive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # numeric-key fast path (trav.positive_pair_keys): same pair set as
-    # trav.positive_pairs over build_edges — id derivation is injective —
-    # but the distinct shuffles 8-byte keys and concats ids post-shuffle
+    # the snapshot's one positive-pair relation: the graph's PURCHASED ⋈
+    # CONTAINS 2-hop on raw keys (ids derive injectively from them), so the
+    # distinct shuffles 8-byte keys and ids concat post-shuffle
     return trav.pair_ids(shared_positive_pairs(spark, sf_dir))
 
 
@@ -481,15 +354,9 @@ ANTI JOIN pos USING (customer_id, product_id)
 """,
 )
 def q_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, names=("orders", "lineitem", "customer", "part"))
+    t = load_tables(spark, sf_dir, names=("customer", "part"))
     return trav.pair_ids(
-        trav.negative_pair_keys(
-            t["orders"],
-            t["lineitem"],
-            t["customer"],
-            t["part"],
-            pos=shared_positive_pairs(spark, sf_dir),
-        )
+        trav.negative_pair_keys(shared_positive_pairs(spark, sf_dir), t["customer"], t["part"])
     )
 
 
@@ -691,11 +558,11 @@ def q_kfold_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # numeric-key assembly end to end: pos/neg pairs on raw longs, category
     # via broadcast part dim on pkey, string ids concat'd only on the final
     # 118k output rows (late materialization — see trav.positive_pair_keys)
-    tables = load_tables(spark, sf_dir, names=("orders", "lineitem", "customer", "part"))
-    o, li, cu, pa = tables["orders"], tables["lineitem"], tables["customer"], tables["part"]
+    tables = load_tables(spark, sf_dir, names=("customer", "part"))
+    cu, pa = tables["customer"], tables["part"]
     shared_pos = shared_positive_pairs(spark, sf_dir)
     pos = shared_pos.withColumn("label", F.lit(1))
-    neg = trav.negative_pair_keys(o, li, cu, pa, pos=shared_pos).withColumn("label", F.lit(0))
+    neg = trav.negative_pair_keys(shared_pos, cu, pa).withColumn("label", F.lit(0))
     train = pos.unionByName(neg)
     part_dim = pa.select(F.col("p_partkey").alias("pkey"), F.col("p_type").alias("category"))
     tf = train.join(F.broadcast(part_dim), "pkey")
@@ -825,7 +692,7 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ckey").alias("c_custkey"), F.col("pkey").alias("p_partkey")
     )
     # (7c + p) % 13 == 0 as an equi-join on modular buckets (see
-    # traversals.negative_pairs): generates the 1/13 sample directly
+    # traversals.negative_pair_keys): generates the 1/13 sample directly
     cust_b = tables["customer"].select(
         "c_custkey", F.pmod(F.col("c_custkey") * 7, F.lit(13)).alias("bucket")
     )

@@ -68,9 +68,7 @@ def _ds_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo(
         spark,
         ("lp_dataset_base", sf_dir),
-        lambda: lp.build_dataset(
-            load_tables(spark, sf_dir, names=GRAPH_TABLES), target_encode=False
-        ),
+        lambda: lp.build_dataset(spark, sf_dir, target_encode=False),
     )
 
 
@@ -114,9 +112,7 @@ def _lp_shared(spark: SparkSession, sf_dir: str) -> dict:
                 model = GBTClassificationModel.load(mdir)
             except Exception:  # corrupt store entry = miss, retrain
                 model = None
-        art = lp.fit_artifacts(
-            None, max_iter=7, materialize=True, ds=_ds_base(spark, sf_dir), model=model
-        )
+        art = lp.fit_artifacts(_ds_base(spark, sf_dir), max_iter=7, materialize=True, model=model)
         if model is None:
             art["model"].write().overwrite().save(mdir)
             with open(marker, "w", encoding="utf-8"):
@@ -673,7 +669,7 @@ def q_ml_link_prediction_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1→M9 end to end: dataset assembly, hash split, weighted GBT fit,
     metric suite + overfit gate. Returns (metric, value) rows. Consumes
     the shared fit (_lp_shared) — one GBT per process."""
-    return lp.run_pipeline(None, artifacts=_lp_shared(spark, sf_dir))
+    return lp.run_pipeline(_lp_shared(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -505,10 +505,11 @@ def q_train_test_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1 stratified 80/20 split (deterministic hash buckets — per-label
     proportions hold in expectation like ``train_test_split(stratify=y)``)
     + A11 class-distribution diagnostics, as one grouped count."""
-    nodes, edges = property_graph(spark, sf_dir)
-    pos = trav.positive_pairs(edges).withColumn("label", F.lit(1))
-    neg = trav.negative_pairs(edges, nodes).withColumn("label", F.lit(0))
-    train = pos.unionByName(neg)
+    t = load_tables(spark, sf_dir, names=("customer", "part"))
+    shared_pos = shared_positive_pairs(spark, sf_dir)
+    pos = shared_pos.withColumn("label", F.lit(1))
+    neg = trav.negative_pair_keys(shared_pos, t["customer"], t["part"]).withColumn("label", F.lit(0))
+    train = trav.pair_ids(pos.unionByName(neg))
     split = F.when(
         F.pmod(md5_int32(F.concat_ws("|", "customer_id", "product_id")), F.lit(5)) < 4, "train"
     ).otherwise("test")

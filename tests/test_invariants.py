@@ -226,7 +226,8 @@ def test_node2vec_embedding_quality(spark):
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph.build import build_edges
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.operators import traversals as trav
 
-    edges = build_edges(_tables(spark))
+    tables = _tables(spark)
+    edges = build_edges(tables)
     walks = alg.random_walks(edges, num_walks=10, walk_len=10, seed=42)
     emb = alg.node_embeddings(walks, dim=32, window_size=5, seed=42).cache()
 
@@ -236,7 +237,7 @@ def test_node2vec_embedding_quality(spark):
         nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda s, x: s + x * x))
         return dot / (na * nb)
 
-    pos = trav.positive_pairs(edges).select("customer_id", "product_id")
+    pos = trav.pair_ids(trav.positive_pair_keys(tables["orders"], tables["lineitem"]))
     e1 = emb.select(F.col("id").alias("customer_id"), F.col("embedding").alias("ea"))
     e2 = emb.select(F.col("id").alias("product_id"), F.col("embedding").alias("eb"))
     linked = pos.join(e1, "customer_id").join(e2, "product_id")
@@ -293,7 +294,8 @@ def test_ml_pipeline_quality(spark):
     metrics DF is complete."""
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
 
-    metrics = {r["metric"]: r["value"] for r in lp.run_pipeline(_tables(spark), max_iter=8).collect()}
+    ds = lp.build_dataset(spark, SF, target_encode=False).cache()
+    metrics = {r["metric"]: r["value"] for r in lp.run_pipeline(lp.fit_artifacts(ds, max_iter=8)).collect()}
     assert metrics["val_auc_roc"] > 0.55, metrics
     assert metrics["train_auc_roc"] > 0.6, metrics
     assert 0.0 <= metrics["val_f1"] <= 1.0
@@ -393,16 +395,19 @@ def test_perfbench_layer_entry_points_resolve(spark, monkeypatch, tmp_path):
     points by attribute. Every (module, attr) it names must resolve to a
     callable, and the api's graph build must call build_nodes/build_edges
     through the module globals that get wrapped, or graph_build reads 0.
-    The graph is built once per snapshot: EP1, EP2 and a graph registry
-    entry on one sf_dir call each builder once, another sf_dir builds it
-    again."""
+    The graph is built once per snapshot: EP1, EP2, the graph registry
+    entries and the ML pair dataset on one sf_dir call each builder once,
+    another sf_dir builds it again; no other package code calls them."""
     import dis
     import importlib
+    import pathlib
+    import re
     import shutil
     import sys
 
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark import api
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.graph.build import GRAPH_TABLES
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo, registry
 
     bench_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
@@ -434,8 +439,17 @@ def test_perfbench_layer_entry_points_resolve(spark, monkeypatch, tmp_path):
     api.ingest_and_build_graph(spark, SF)
     assert calls == ["build_nodes", "build_edges"]
     api.engineer_features(spark, SF)
-    registry.queries()["in_out_degrees"](spark, SF)
+    for name in ("in_out_degrees", "graph_stats", "degree_features", "train_test_split_stats"):
+        registry.queries()[name](spark, SF)
+    lp.build_dataset(spark, SF)
     assert calls == ["build_nodes", "build_edges"], f"one snapshot's graph was built more than once: {calls}"
+    pkg = pathlib.Path(api.__file__).parent
+    callers = sorted(
+        str(f.relative_to(pkg))
+        for f in pkg.rglob("*.py")
+        if re.search(r"(?<!def )\bbuild_(nodes|edges)\(", f.read_text(encoding="utf-8"))
+    )
+    assert callers == ["api.py"], f"graph builders called outside api.property_graph: {callers}"
 
     other = tmp_path / "snapshot"
     other.mkdir()
@@ -911,8 +925,7 @@ def test_oversample_and_lifecycle(spark):
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import lifecycle as lc
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
 
-    tables = _tables(spark)
-    full = lp.build_dataset(tables)
+    full = lp.build_dataset(spark, SF)
     train, test = lp.split_train_test(full)
     model, assembler = lp.train_gbt(train, max_iter=3, max_depth=3)
     assert lc.compatibility_probe(model, assembler, test) is True
@@ -930,8 +943,7 @@ def test_mlp_flat_approximation(spark):
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import lifecycle as lc
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
 
-    tables = _tables(spark)
-    ds = lp.build_dataset(tables).cache()
+    ds = lp.build_dataset(spark, SF).cache()
     train, test = lp.split_train_test(ds)
     model, assembler, stats = lc.train_mlp(train, lp.FEATURE_COLS, max_iter=15)
     pred = model.transform(assembler.transform(lc.apply_block_scalers(test, stats)))
@@ -946,7 +958,7 @@ def test_per_block_standardization(spark):
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import lifecycle as lc
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
 
-    ds = lp.build_dataset(_tables(spark)).cache()
+    ds = lp.build_dataset(spark, SF).cache()
     stats = lc.fit_block_scalers(ds)
     assert set(c for cs in lc.TOWER_BLOCKS.values() for c in cs) == set(lp.FEATURE_COLS)
     z = lc.apply_block_scalers(ds, stats)
@@ -966,7 +978,7 @@ def test_multi_tower_training(spark):
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import multitower as mt
 
-    ds = lp.build_dataset(_tables(spark)).cache()
+    ds = lp.build_dataset(spark, SF).cache()
     train, test = lp.split_train_test(ds)
     params, stats, history = mt.train_multi_tower(train, max_iter=40, lr=0.05)
     assert len(history) >= 5 and history[-1] < 0.85 * history[0], f"loss did not fall: {history[0]:.4f} -> {history[-1]:.4f}"
@@ -1084,7 +1096,7 @@ def test_gbt_early_stopping_caps_rounds(spark):
     early_stopping_rounds=25 — MLlib's analog is validationTol)."""
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
 
-    ds = lp.build_dataset(_tables(spark)).cache()
+    ds = lp.build_dataset(spark, SF).cache()
     train, _ = lp.split_train_test(ds)
     model, _ = lp.train_gbt(train, max_iter=40, max_depth=3, validation_tol=0.03)
     assert model.getNumTrees < 40, f"early stopping never triggered ({model.getNumTrees} trees)"
@@ -1096,7 +1108,7 @@ def test_target_encoding_no_test_leakage(spark):
     byte-identical (the encoding is fit on the train partition only)."""
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.ml import link_prediction as lp
 
-    ds = lp.build_dataset(_tables(spark), target_encode=False).cache()
+    ds = lp.build_dataset(spark, SF, target_encode=False).cache()
     train, test = lp.split_train_test(ds)
     flipped = test.withColumn("label", F.lit(1) - F.col("label"))
 
