@@ -722,10 +722,13 @@ def louvain(
                 "node string, community_id string",
             )
             if mapping is None:
+                # driver-built rows: nothing to materialize, and a
+                # checkpoint here would outlive every caller (a lazy
+                # result leaves no one to unpersist it)
                 out = comm_df.select(F.col("node").alias("id"), "community_id")
             else:
-                out = mapping.join(comm_df, "node").select("id", "community_id")
-            out = out.localCheckpoint(eager=True)
+                # the mapping's parquet state is deleted below
+                out = mapping.join(comm_df, "node").select("id", "community_id").localCheckpoint(eager=True)
             shutil.rmtree(tmp_root, ignore_errors=True)
             return out
         if mapping is None:

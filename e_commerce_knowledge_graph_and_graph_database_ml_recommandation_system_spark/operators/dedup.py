@@ -219,7 +219,9 @@ def simhash_near_dup(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     With 4 bands of 8 bits, any pair within hamming 3 shares an intact band
     (pigeonhole) — so the banded equi-join returns EXACTLY the brute-force
     answer while scaling as an equi-join."""
-    sh = simhash(docs).cache()  # one row per doc; avoids recompute per join side
+    # no cache: the returned plan is lazy, so nothing could unpersist it;
+    # the two join sides share simhash's exchanges (Spark reuses them)
+    sh = simhash(docs)
     stacked = sh.select(
         "doc_id",
         "simhash",

@@ -5,21 +5,19 @@ probability, greedy category-diversity constraints, temperature-softmax
 sampling (``topk_recommandations_*.py``). Here:
 
 - deterministic top-k          -> one ranking window per customer (W4)
-- category-diverse top-k       -> two stacked windows (W6)
+- category-diverse top-k       -> two stacked windows (W6); the reference's
+  sequential greedy pick (R5) selects exactly these rows, so it has no
+  separate implementation
 - weighted sampling w/o repl.  -> Gumbel-top-k: argmax of logit + Gumbel noise
   over a window — the exact distributional equivalent of the reference's
   sequential ``np.random.choice`` softmax loop, but embarrassingly parallel
   (R1-R4; seeded, reproducible)
-- exact sequential greedy      -> applyInPandas escape hatch (R5), grouped by
-  customer so state never exceeds one customer's candidate list
 
 All windows partition by customer — a single shuffle on customer_id; at
 100 TB the candidate table is the big input and this is its only shuffle.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -48,8 +46,12 @@ def diverse_topk(scored: DataFrame, k: int, score_col: str = "score", per_catego
         F.desc(score_col), F.asc("product_id")
     )
     w_all = Window.partitionBy("customer_id").orderBy(F.desc(score_col), F.asc("product_id"))
+    # one shuffle for both windows: hash partitions on customer_id also
+    # cluster every (customer_id, category) group, where the category
+    # window alone would shuffle on both keys and the customer window again
     return (
-        scored.withColumn("cat_rank", F.row_number().over(w_cat))
+        scored.repartition("customer_id")
+        .withColumn("cat_rank", F.row_number().over(w_cat))
         .filter(F.col("cat_rank") <= per_category)
         .withColumn("rank", F.row_number().over(w_all))
         .filter(F.col("rank") <= k)
@@ -171,51 +173,3 @@ def gumbel_topk(
     w = Window.partitionBy("customer_id").orderBy(F.desc("sample_key"), F.asc("product_id"))
     return out.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k).drop("sample_key")
 
-
-def greedy_diverse_topk_exact(
-    scored: DataFrame, k: int, score_col: str = "score", max_per_category: int = 1
-) -> DataFrame:
-    """R5: EXACT sequential greedy semantics of the reference's selection loop
-    (``topk_recommandations_diverse_nodiscounts.py:273-296``): walk candidates
-    in score order, skip if the category quota is hit, stop at k.
-
-    Grouped-map Pandas UDF: one Arrow batch per customer (candidate lists are
-    capped ~2k rows, so per-group state is tiny); the only Python on the
-    serving path, used when the windowed contract (diverse_topk) isn't exact
-    enough.
-    """
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    schema_cols = [f.name for f in scored.schema.fields]
-    # copy the fields: StructType.add mutates in place, and DataFrame.schema
-    # is cached — mutating it corrupts the source DataFrame's column list
-    out_schema = StructType(list(scored.schema.fields))
-    if "rank" not in schema_cols:
-        out_schema = out_schema.add("rank", IntegerType())
-
-    def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        # the sequential greedy walk (take candidate iff its category quota
-        # is open, stop at k) selects exactly the rows whose within-category
-        # rank < quota, in score order — so it vectorizes as a groupby
-        # cumcount (an iterrows loop here measured ~30s at sf0.1; this is
-        # milliseconds, with identical output)
-        pdf = pdf.sort_values([score_col, "product_id"], ascending=[False, True])
-        cat_rank = pdf.groupby("category").cumcount()
-        out = pdf[cat_rank < max_per_category].head(k).copy()
-        out["rank"] = range(1, len(out) + 1)
-        return out[[*schema_cols, "rank"]]
-
-    # pre-partition by the group key at core-count granularity (r11): the
-    # grouped-map's own exchange is AQE-coalesced by BYTES, and per-group
-    # Python cost is not byte-proportional — at dim-scale candidate volume
-    # AQE folds every customer into ONE partition and the whole greedy pass
-    # runs serially in a single Python worker (measured: a 1.3 s one-task
-    # stage was serve_greedy's critical path). An explicit keyed repartition
-    # is honored as-is (hash on customer_id satisfies the grouped-map's
-    # clustering requirement, so no second exchange appears); at cluster
-    # scale defaultParallelism = total executor cores — the right floor for
-    # a Python-bound per-group stage.
-    par = scored.sparkSession.sparkContext.defaultParallelism
-    return scored.repartition(par, "customer_id").groupBy("customer_id").applyInPandas(
-        pick, schema=out_schema
-    )

@@ -15,8 +15,9 @@ It also holds what a warm serving request would otherwise re-derive:
 - table schemas (``sources.tables.load_table``), so a scan skips parquet
   schema inference, which is a Spark job;
 - the serving prefixes (``plans.registry_serving``): the cohort, its
-  purchase pairs, the scored valid products with their global and
-  per-category positions, and the prune bounds;
+  purchase pairs, the scored catalog's global positions, and the prune
+  bounds (the scored catalog itself, with its per-category positions, is
+  the one flagship reads);
 - the brute-ANN index (``operators.similarity.ann_topk``): the index row
   count and one broadcast (ids, matrix, norms) value.
 
@@ -31,7 +32,9 @@ O(|embeddings|).
 Contract: a snapshot path (an ``sf_dir`` and the table files under it) is
 immutable for the life of a Spark app. A caller that rewrites a path in
 place must call ``clear()`` before reading it again, or it reads the old
-schema and the old prefixes.
+schema and the old prefixes. ``clear()`` also releases the blocks the
+memo held, so it ends every memoized DataFrame and broadcast it handed
+out.
 
 At 100 TB this is exactly the "materialize the shared prefix once" pattern a
 production pipeline uses (write the assembled dataset to parquet, fan out
@@ -47,6 +50,8 @@ from __future__ import annotations
 import contextlib
 from typing import Any, Callable
 
+from pyspark import SparkContext
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: dict[tuple, Any] = {}
@@ -132,4 +137,23 @@ def memo(spark: SparkSession, tag: tuple, build: Callable[[], Any]) -> Any:
 
 
 def clear() -> None:
+    """Drop every memoized artifact and release the blocks this app's
+    entries held: each materialized DataFrame's checkpoint blocks and each
+    broadcast's value. A released local checkpoint cannot be recomputed
+    (its lineage was truncated) and a destroyed broadcast cannot be read,
+    so this ENDS every memoized DataFrame and broadcast the memo handed
+    out: call it only when no caller still holds one, as at the start of
+    a refresh pass over a new snapshot. Without the release every pass
+    leaves its checkpoints behind for the life of the app."""
+    sc = SparkContext._active_spark_context
+    app = sc.applicationId if sc is not None else None
+    for key, out in _CACHE.items():
+        if key[0] != app:
+            continue  # a stopped app's blocks went with its context
+        if isinstance(out, Broadcast):
+            out.destroy()
+        elif isinstance(out, DataFrame):
+            plan = out._jdf.queryExecution().logical()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
     _CACHE.clear()

@@ -6,6 +6,11 @@ scoring, category-diverse top-k per customer. Pure DataFrame ops — scans,
 broadcast + anti joins, aggregation, stacked windows — and DuckDB-oracle
 checkable end to end.
 
+This module also owns what flagship shares with the serving family
+(plans/registry_serving): the snapshot's one scored catalog with its
+per-category ranking, the purchase-count bound that prunes it, and the
+oracle CTE text both families' DuckDB oracles start from.
+
 reference trace: valid-product filter ``topk_recommandations_diverse_
 nodiscounts.py:189-201`` → exclusion ``:217-226`` → scoring ``:256-262``
 (model prob; here popularity×recency proxy) → greedy diverse pick ``:279-296``.
@@ -16,31 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_tables
+from ..sources.tables import load_table, load_tables
+from ._memo import memo
 
 AS_OF = "2002-01-01"
-
-
-def scored_valid_products(tables: dict) -> DataFrame:
-    """Valid products (P10 analog) scored by popularity × recency decay
-    (reference scoring proxy at ``topk_recommandations_diverse_
-    nodiscounts.py:256-262``). Columns: p_partkey, p_name, category, score."""
-    part, lineitem = tables["part"], tables["lineitem"]
-    prod_stats = lineitem.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
-        F.count("*").alias("popularity"),
-        F.datediff(F.lit(AS_OF).cast("date"), F.max("l_shipdate").cast("date")).alias("recency_days"),
-    )
-    return (
-        part.filter((F.col("p_size") > 0) & F.col("p_type").isNotNull())
-        .join(prod_stats, "p_partkey", "left")
-        .na.fill({"popularity": 0, "recency_days": 3650})
-        .select(
-            F.col("p_partkey"),
-            F.col("p_name"),
-            F.col("p_type").alias("category"),
-            F.round(F.col("popularity") / (F.lit(1.0) + F.col("recency_days") / F.lit(365.0)), 6).alias("score"),
-        )
-    )
 
 
 def shared_purchased_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,16 +43,63 @@ def shared_purchased_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_scored_valid_products(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memo-shared scored valid-product relation (part-sized: |P| rows).
-    Seven serving queries derive the identical lineitem prod-stats
-    aggregate + part join; one checkpoint serves them all (r11)."""
-    from ._memo import memo
+    """The snapshot's scored catalog, memoized (part-sized: |P| rows):
+    valid products (P10 analog) scored by popularity × recency decay
+    (reference scoring proxy at ``topk_recommandations_diverse_
+    nodiscounts.py:256-262``), each with ``cat_pos``, its 1-based position
+    in its category by score desc, p_partkey asc. Columns: p_partkey,
+    p_name, category, score, cat_pos.
+
+    Flagship's prune prefix and every serving request read this one
+    relation, so the per-category ranking is computed here and nowhere
+    else. The window is partitioned by category: no step funnels |part|
+    through one task."""
 
     def build() -> DataFrame:
         t = load_tables(spark, sf_dir, names=("part", "lineitem"))
-        return scored_valid_products(t)
+        part, lineitem = t["part"], t["lineitem"]
+        prod_stats = lineitem.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
+            F.count("*").alias("popularity"),
+            F.datediff(F.lit(AS_OF).cast("date"), F.max("l_shipdate").cast("date")).alias("recency_days"),
+        )
+        scored = (
+            part.filter((F.col("p_size") > 0) & F.col("p_type").isNotNull())
+            .join(prod_stats, "p_partkey", "left")
+            .na.fill({"popularity": 0, "recency_days": 3650})
+            .select(
+                F.col("p_partkey"),
+                F.col("p_name"),
+                F.col("p_type").alias("category"),
+                F.round(F.col("popularity") / (F.lit(1.0) + F.col("recency_days") / F.lit(365.0)), 6).alias("score"),
+            )
+        )
+        by_score = Window.partitionBy("category").orderBy(F.desc("score"), F.asc("p_partkey"))
+        return scored.withColumn("cat_pos", F.row_number().over(by_score))
 
     return memo(spark, ("scored_valid_products", sf_dir), build)
+
+
+def purchase_bound(spark: SparkSession, sf_dir: str, purchased: DataFrame, per_category: bool) -> DataFrame:
+    """A lazy 1-row aggregate ``bound``: the most distinct products any one
+    customer in ``purchased`` (distinct c_custkey, p_partkey pairs) bought
+    in all, or in one category (part's p_type) with ``per_category``; 0
+    when ``purchased`` is empty.
+
+    Because the score is customer-independent, a customer's top-m
+    unpurchased products lie within the catalog's top (bound + m) by
+    score, or within each category's top (bound + m) per category. This
+    bound is what makes every prune in flagship and the serving family
+    lossless."""
+    keys = ["c_custkey"]
+    if per_category:
+        part_cat = load_table(spark, "part", sf_dir).select("p_partkey", F.col("p_type").alias("category"))
+        purchased = purchased.join(F.broadcast(part_cat), "p_partkey")
+        keys.append("category")
+    return (
+        purchased.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.coalesce(F.max("n"), F.lit(0)).alias("bound"))
+    )
 
 
 def flagship(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
@@ -76,69 +107,37 @@ def flagship(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
 
     Works directly on the relational tables (graph edge semantics inlined:
     orders≡PURCHASED, lineitem≡CONTAINS) so the whole plan is one Catalyst
-    DAG — scans prune to the consumed columns only, `part` broadcasts, and
-    the only big shuffles are the two purchase-pair aggregates (c_max and
-    the positions fold) and the final per-customer window.
+    DAG — scans prune to the consumed columns only, the prefix broadcasts,
+    and the only big shuffles are the positions fold over the purchase
+    pairs and the final per-customer window. The scored catalog, its
+    per-category ranking and the purchase pairs are the memoized prefixes
+    the serving family reads too; on the distinct purchase pairs the
+    per-(customer, category) product count is a plain count(*), where raw
+    pairs would need countDistinct and its two exchanges.
     """
-    t = load_tables(spark, sf_dir, names=("customer", "part"))
-    customer, part = t["customer"], t["part"]
-    # memo-shared prefixes (r11 optimization round): the scored-product
-    # relation and the DISTINCT purchase-pair checkpoint are the same
-    # materializations ~10 other registry consumers (serving family,
-    # traversal family, market-basket family) already read — flagship was
-    # the last query re-deriving both per run (two orders⋈lineitem rescans
-    # plus a lineitem prod-stats aggregate per execution). On the distinct
-    # relation the per-(customer, category) product count is a plain
-    # count(*) — the raw-pair form needed countDistinct, which Spark
-    # expands into TWO exchanges keyed (c, cat, p) over all 600k raw rows.
-    # The mex positions fold is unchanged: collect_set over distinct pairs
-    # is the identical set.
+    customer = load_table(spark, "customer", sf_dir)
     valid = shared_scored_valid_products(spark, sf_dir)
     purchased = shared_purchased_pairs(spark, sf_dir)
 
-    # EXACT candidate pruning: the score is customer-independent, so a
-    # customer's per-category winner (cat_rank=1 among their unpurchased
-    # products) always sits within the category's global top (c_max + 1),
-    # where c_max = max products any single customer purchased in one
-    # category. Pruning each category to that prefix shrinks the candidate
-    # join from |C|×|P| (300M rows at sf0.1, ~340s) to |C|×(|cats|·(c_max+1))
-    # (~4M rows) with PROVABLY identical output — the physical-plan analog
-    # of the reference's 1500-2000 candidate cap, but lossless.
-    # c_max is a SCALAR and the pruned prefix is |cats|·(c_max+1) rows —
-    # dim-table sized by construction. c_max stays a lazy 1-row aggregate
-    # broadcast into the prune filter (the serving pruner's pattern) so
-    # prefix derivation is ONE Spark job — a scalar collect would add a
-    # second driver barrier for nothing.
-    def _build_prune() -> DataFrame:
-        cmax_df = (
-            purchased.join(
-                F.broadcast(part.select("p_partkey", F.col("p_type").alias("category"))), "p_partkey"
-            )
-            .groupBy("c_custkey", "category")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.coalesce(F.max("n"), F.lit(0)).alias("c_max"))
-        )
-        w_prune = Window.partitionBy("category").orderBy(F.desc("score"), F.asc("p_partkey"))
-        return (
-            valid.withColumn("cat_pos", F.row_number().over(w_prune))
-            .crossJoin(F.broadcast(cmax_df))
-            .filter(F.col("cat_pos") <= F.col("c_max") + 1)
-            .drop("c_max")
-        )
-
-    # materialize the shared prefix ONCE per (app, sf_dir), executor-side
-    # (it feeds two broadcast consumers below; k-independent by
-    # construction — c_max+1 bounds ANY k's winner). r12: the prefix used
-    # to be a per-EXECUTION localCheckpoint, re-deriving the c_max
-    # aggregate chain + the |P| prune window and paying a job barrier on
-    # every run; the memo makes it one materialization per app like the
-    # scored-product/purchase-pair prefixes it derives from. Executor
-    # block storage, not a driver round-trip (r3 advice — under
-    # category-density skew c_max grows with the densest customer, so
-    # driver memory must not be on that path).
-    from ._memo import memo
-
-    pruned = memo(spark, ("flagship_prune_prefix", sf_dir), _build_prune)
+    # EXACT candidate pruning: a customer's per-category winner (the best
+    # product they did not purchase) always sits within the category's top
+    # (c_max + 1), c_max = purchase_bound per category over all customers.
+    # The prefix is |cats|·(c_max+1) rows, dim-sized by construction, and
+    # shrinks the candidate domain from |C|×|P| to |C|×prefix with provably
+    # identical output — the physical-plan analog of the reference's
+    # 1500-2000 candidate cap, but lossless. c_max stays a lazy 1-row
+    # aggregate broadcast into the filter, so deriving the prefix is one
+    # Spark job, and the memo materializes it executor-side once per
+    # (app, sf_dir): under category-density skew c_max grows with the
+    # densest customer, so driver memory must not be on that path. The
+    # prefix is k-independent: c_max+1 bounds ANY k's winner.
+    pruned = memo(
+        spark,
+        ("flagship_prune_prefix", sf_dir),
+        lambda: valid.crossJoin(F.broadcast(purchase_bound(spark, sf_dir, purchased, per_category=True)))
+        .filter(F.col("cat_pos") <= F.col("bound") + 1)
+        .drop("bound"),
+    )
 
     # Per-(customer, category) winner WITHOUT expanding candidates (J6/J7
     # fused): the winner (best unpurchased product, score desc / p_partkey
@@ -199,8 +198,10 @@ def flagship(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     )
 
 
-FLAGSHIP_ORACLE_SQL = f"""
-WITH prod_stats AS (
+# The DuckDB mirror of the scored catalog (without cat_pos) and of the
+# distinct purchase pairs: flagship's oracle and every serving oracle
+# (registry_serving._CANDIDATES_CTE) start from this one CTE chain.
+CATALOG_CTE = f"""prod_stats AS (
     SELECT l_partkey AS p_partkey,
            COUNT(*) AS popularity,
            datediff('day', CAST(MAX(l_shipdate) AS DATE), DATE '{AS_OF}') AS recency_days
@@ -215,7 +216,10 @@ valid AS (
 purchased AS (
     SELECT DISTINCT o.o_custkey AS c_custkey, l.l_partkey AS p_partkey
     FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-),
+)"""
+
+FLAGSHIP_ORACLE_SQL = f"""
+WITH {CATALOG_CTE},
 candidates AS (
     SELECT c.c_custkey, v.*
     FROM customer c CROSS JOIN valid v

@@ -14,6 +14,7 @@ from ..operators import topk as tk
 from ..operators.degrees import community_degree_features, degree_histogram, node_degrees
 from ..sources.tables import load_table
 from .registry import GRAPH_EDGES_CTE, register, shared_node_degrees
+from .registry_serving import _candidates, _gumbel_oracle_sql, _gumbel_variant
 
 # ---------------------------------------------------------------------------
 # A2: global degree moments
@@ -233,7 +234,6 @@ def q_model_scoring_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..ml import link_prediction as lp
     from .registry_ml import _lp_shared
-    from .registry_serving import _candidates
 
     art = _lp_shared(spark, sf_dir)
     model, assembler = art["model"], art["assembler"]
@@ -261,21 +261,7 @@ def q_model_scoring_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gumbel_variant(spark, sf_dir, **kw) -> DataFrame:
-    from .registry_serving import _candidates, _normalized_probs
-
-    probs = _normalized_probs(_candidates(spark, sf_dir))
-    out = tk.gumbel_topk(probs, k=5, score_col="p", **kw)
-    return out.select("customer_id", "rank", "product_id", "category", F.round("p", 6).alias("p"))
-
-
-def _gumbel_sql(**kw) -> str:
-    from .registry_serving import _gumbel_oracle_sql
-
-    return _gumbel_oracle_sql(**kw)
-
-
-@register("serve_softmax_noise_topk", _gumbel_sql(temperature=3.0, seed=43, noise_scale=0.1))
+@register("serve_softmax_noise_topk", _gumbel_oracle_sql(temperature=3.0, seed=43, noise_scale=0.1))
 def q_serve_softmax_noise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R2: logit softmax with hash-derived Box-Muller gaussian noise, T=3.0
     (reference ``took_recommandations_softmaxsampling_discount.py:213-241``);
@@ -283,14 +269,14 @@ def q_serve_softmax_noise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _gumbel_variant(spark, sf_dir, temperature=3.0, seed=43, noise_scale=0.1)
 
 
-@register("serve_stochastic_softmax_topk", _gumbel_sql(temperature=5.0, seed=44, noise_scale=0.15))
+@register("serve_stochastic_softmax_topk", _gumbel_oracle_sql(temperature=5.0, seed=44, noise_scale=0.15))
 def q_serve_stochastic_softmax_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R3: stochastic softmax, T=5.0, noise 0.15 (reference
     ``topk_recommandations_stochasticsoftmaxsampling_discount.py:193-228``)."""
     return _gumbel_variant(spark, sf_dir, temperature=5.0, seed=44, noise_scale=0.15)
 
 
-@register("serve_adam_mixture_topk", _gumbel_sql(temperature=2.0, seed=45, uniform_mix=0.3))
+@register("serve_adam_mixture_topk", _gumbel_oracle_sql(temperature=2.0, seed=45, uniform_mix=0.3))
 def q_serve_adam_mixture_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R4: 0.3·uniform + 0.7·p mixture over normalized p, T=2.0 (reference
     ``took_recommandations_adamsampling_discount.py:58-100``)."""

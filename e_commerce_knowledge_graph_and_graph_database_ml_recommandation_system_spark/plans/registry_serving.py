@@ -16,7 +16,7 @@ from ..operators import topk as tk
 from ..operators.ranking import global_rank_with_prefix
 from ..sources.tables import load_table, load_tables
 from ._memo import memo
-from .flagship import shared_purchased_pairs, shared_scored_valid_products
+from .flagship import CATALOG_CTE, purchase_bound, shared_purchased_pairs, shared_scored_valid_products
 from .registry import register
 
 # the serving cohort: c_custkey % 100 == 0. Every memo tag below carries it,
@@ -59,20 +59,17 @@ def _broadcastable_purchased(spark: SparkSession, sf_dir: str) -> bool:
 
 
 def _ranked_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scored valid products with their global position ``pos`` and
-    per-category position ``cat_pos`` (score desc, p_partkey asc),
-    memoized: |P| rows, ranked once per snapshot. The global position is
-    the distributed rank of operators/ranking (range partition + local
-    windows + broadcast offsets), so no step funnels |part| through one
-    task; the per-category window is partitioned by category."""
+    """The scored catalog (with its per-category ``cat_pos``) plus its
+    global position ``pos`` (score desc, p_partkey asc), memoized: |P|
+    rows, ranked once per snapshot. ``pos`` is the distributed rank of
+    operators/ranking (range partition + local windows + broadcast
+    offsets), so no step funnels |part| through one task."""
 
     def build() -> DataFrame:
-        by_score = [F.desc("score"), F.asc("p_partkey")]
         valid = shared_scored_valid_products(spark, sf_dir).withColumn("_zero", F.lit(0).cast("long"))
         return (
-            global_rank_with_prefix(valid, by_score, "_zero")
+            global_rank_with_prefix(valid, [F.desc("score"), F.asc("p_partkey")], "_zero")
             .withColumnRenamed("rank", "pos")
-            .withColumn("cat_pos", F.row_number().over(Window.partitionBy("category").orderBy(*by_score)))
             .drop("_zero", "cum_value", "total_n", "total_value")
         )
 
@@ -80,36 +77,28 @@ def _ranked_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _prefix_bound(spark: SparkSession, sf_dir: str, mode: str) -> int:
-    """The k-independent part of a prune bound, memoized as a scalar:
-    ``p_max`` (most products any cohort customer purchased) for
-    ``"global"``, ``c_max`` (most any cohort customer purchased in one
+    """The k-independent part of a prune bound, memoized as a scalar: the
+    cohort's ``purchase_bound``, ``p_max`` (most products any cohort
+    customer purchased) for ``"global"``, ``c_max`` (most in one
     category) for ``"category"``."""
-
-    def build() -> int:
-        purchased = _cohort_purchased(spark, sf_dir)
-        if mode == "global":
-            per_group = purchased.groupBy("c_custkey")
-        else:
-            part_cat = load_table(spark, "part", sf_dir).select("p_partkey", F.col("p_type").alias("category"))
-            per_group = purchased.join(F.broadcast(part_cat), "p_partkey").groupBy("c_custkey", "category")
-        return (
-            per_group.agg(F.count("*").alias("n"))
-            .agg(F.coalesce(F.max("n"), F.lit(0)).alias("m"))
-            .first()["m"]
-        )
-
     tag = "serve_prune_pmax" if mode == "global" else "serve_prune_cmax"
-    return memo(spark, (tag, sf_dir, COHORT), build)
+    return memo(
+        spark,
+        (tag, sf_dir, COHORT),
+        lambda: purchase_bound(
+            spark, sf_dir, _cohort_purchased(spark, sf_dir), per_category=mode == "category"
+        ).first()["bound"],
+    )
 
 
 def _candidates(spark: SparkSession, sf_dir: str, prune: tuple[str, int] | None = None) -> DataFrame:
     """Scored candidates for the serving cohort: (customer_id, product_id,
     p_name, category, score), purchased excluded (J6/J7).
 
-    ``prune`` applies flagship's EXACT candidate pruning (the score is
-    customer-independent here too — round-1 judge item: the unpruned form
-    broadcasts ALL valid products into the crossJoin, which stops being a
-    broadcast at 100x part):
+    ``prune`` applies flagship's EXACT candidate pruning, with the
+    cohort's ``purchase_bound`` (the score is customer-independent here
+    too; the unpruned form broadcasts ALL valid products into the
+    crossJoin, which stops being a broadcast at 100x part):
 
     * ``("global", k)``  — plain top-k consumers: a customer's top-k
       unpurchased products always sit inside the global top (P_max + k)
@@ -157,32 +146,16 @@ def _candidates(spark: SparkSession, sf_dir: str, prune: tuple[str, int] | None 
     )
 
 
-# shared oracle CTE chain (mirrors _candidates + flagship scoring exactly)
-_CANDIDATES_CTE = """
-prod_stats AS (
-    SELECT l_partkey AS p_partkey,
-           COUNT(*) AS popularity,
-           datediff('day', CAST(MAX(l_shipdate) AS DATE), DATE '2002-01-01') AS recency_days
-    FROM lineitem GROUP BY l_partkey
-),
-valid AS (
-    SELECT p.p_partkey, p.p_name, p.p_type AS category,
-           ROUND(COALESCE(s.popularity, 0) / (1.0 + COALESCE(s.recency_days, 3650) / 365.0), 6) AS score
-    FROM part p LEFT JOIN prod_stats s ON p.p_partkey = s.p_partkey
-    WHERE p.p_size > 0 AND p.p_type IS NOT NULL
-),
-purchased AS (
-    SELECT DISTINCT o.o_custkey AS c_custkey, l.l_partkey AS p_partkey
-    FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-),
+# the serving oracles' candidates: the cohort's unpurchased products of
+# flagship's catalog CTE (mirrors _candidates, unpruned)
+_CANDIDATES_CTE = f"""{CATALOG_CTE},
 candidates AS (
     SELECT c.c_custkey AS customer_id, v.p_partkey AS product_id,
            v.p_name, v.category, v.score
     FROM (SELECT c_custkey FROM customer WHERE c_custkey % 100 = 0) c
     CROSS JOIN valid v
     ANTI JOIN purchased p ON p.c_custkey = c.c_custkey AND p.p_partkey = v.p_partkey
-)
-"""
+)"""
 
 
 def _gumbel_oracle_sql(
@@ -208,7 +181,7 @@ def _gumbel_oracle_sql(
         logit = f"({logit} + {gauss} * {noise_scale!r})"
     gumbel = f"(-LN(-LN({u(f'g{seed}')} + {eps}) + {eps}))"
     return f"""
-WITH {_CANDIDATES_CTE.strip()},
+WITH {_CANDIDATES_CTE},
 probs AS (
     SELECT customer_id, product_id, category,
            score / CAST(SUM(CAST(score AS DECIMAL(18,6))) OVER (PARTITION BY customer_id) AS DOUBLE) AS p,
@@ -224,19 +197,23 @@ WHERE rank <= 5
 """
 
 
-def _normalized_probs(cands: DataFrame) -> DataFrame:
-    """p = score / per-customer sum, denominator accumulated as DECIMAL(18,6)
-    (score is already 6dp-rounded, so the cast is lossless and the sum exact
-    — float summation order can't perturb p across engines or partitions)."""
-    w = Window.partitionBy("customer_id")
-    denom = F.sum(F.col("score").cast("decimal(18,6)")).over(w).cast("double")
-    return cands.withColumn("p", F.col("score") / denom)
+def _gumbel_variant(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
+    """The R1-R4 sampling body: Gumbel-top-5 over each cohort customer's
+    normalized candidate probabilities, ``kw`` being gumbel_topk's
+    temperature, seed and noise parameters. p = score / per-customer sum,
+    the denominator accumulated as DECIMAL(18,6) (score is already
+    6dp-rounded, so the cast is lossless and the sum exact — float
+    summation order can't perturb p across engines or partitions)."""
+    cands = _candidates(spark, sf_dir)
+    denom = F.sum(F.col("score").cast("decimal(18,6)")).over(Window.partitionBy("customer_id")).cast("double")
+    out = tk.gumbel_topk(cands.withColumn("p", F.col("score") / denom), k=5, score_col="p", **kw)
+    return out.select("customer_id", "rank", "product_id", "category", F.round("p", 6).alias("p"))
 
 
 @register(
     "serve_topk_plain",
     f"""
-WITH {_CANDIDATES_CTE.strip()}
+WITH {_CANDIDATES_CTE}
 SELECT customer_id, rank, product_id, category, score
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY customer_id
                                    ORDER BY score DESC, product_id ASC) AS rank
@@ -255,7 +232,7 @@ def q_serve_topk_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "serve_greedy_diverse_topk",
     f"""
-WITH {_CANDIDATES_CTE.strip()},
+WITH {_CANDIDATES_CTE},
 cat_ranked AS (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY customer_id, category
                                  ORDER BY score DESC, product_id ASC) AS cat_rank
@@ -270,25 +247,21 @@ WHERE rank <= 5
 """,
 )
 def q_serve_greedy_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R5 EXACT sequential greedy (Arrow grouped-map, ≤2 per category, k=5).
-
-    The greedy walk provably equals the two-window formulation (a candidate
-    is accepted iff it is within its category's top-2), so the applyInPandas
-    implementation is hash-checked against the pure-SQL oracle — the
-    strongest possible correctness check for the Python escape hatch."""
-    # prune p_name before the Arrow transfer: the grouped-map ships every
-    # candidate row to Python, and the long string column dominated the IPC
-    cands = _candidates(spark, sf_dir, prune=("category", 2)).select(
-        "customer_id", "product_id", "category", "score"
+    """R5: the reference's greedy pick, ≤2 per category, k=5
+    (``topk_recommandations_diverse_nodiscounts.py:273-296``). The
+    sequential walk (take a candidate iff its category's quota is open,
+    stop at k) selects exactly the candidates within their category's
+    top 2, in score order, so it is the two-window W6 contract over the
+    exact per-category prune, hash-checked against the unpruned oracle."""
+    return tk.diverse_topk(_candidates(spark, sf_dir, prune=("category", 2)), k=5, per_category=2).select(
+        "customer_id", "rank", "product_id", "category", "score"
     )
-    out = tk.greedy_diverse_topk_exact(cands, k=5, max_per_category=2)
-    return out.select("customer_id", "rank", "product_id", "category", "score")
 
 
 @register(
     "serve_relaxed_diverse_topk",
     f"""
-WITH {_CANDIDATES_CTE.strip()},
+WITH {_CANDIDATES_CTE},
 pool AS (
     SELECT customer_id, product_id, category, score
     FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY customer_id
@@ -334,7 +307,7 @@ def q_serve_relaxed_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "serve_median_per_category",
     f"""
-WITH {_CANDIDATES_CTE.strip()},
+WITH {_CANDIDATES_CTE},
 counted AS (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY customer_id, category
                                  ORDER BY score ASC, product_id ASC) AS rn,
@@ -356,7 +329,7 @@ def q_serve_median_per_category(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "serve_display_records",
     f"""
-WITH {_CANDIDATES_CTE.strip()},
+WITH {_CANDIDATES_CTE},
 topk AS (
     SELECT customer_id, rank, product_id, p_name, category, score
     FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY customer_id
@@ -395,9 +368,7 @@ def q_serve_gumbel_softmax_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-independent and engine-agnostic, so even the SAMPLED selection
     hash-matches DuckDB (distributional invariants additionally
     pytest-checked, SURVEY §5)."""
-    probs = _normalized_probs(_candidates(spark, sf_dir))
-    out = tk.gumbel_topk(probs, k=5, temperature=2.5, seed=42, score_col="p")
-    return out.select("customer_id", "rank", "product_id", "category", F.round("p", 6).alias("p"))
+    return _gumbel_variant(spark, sf_dir, temperature=2.5, seed=42)
 
 
 @register(

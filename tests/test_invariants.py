@@ -2796,3 +2796,74 @@ def test_warm_refresh_reuses_generated_code(spark, sf_dir):
 
     counts = [refresh_pass() for _ in range(3)]
     assert counts[2] * 4 < counts[0], f"classes compiled per refresh pass: {counts}"
+
+
+def test_refresh_passes_leave_no_persisted_blocks(spark, sf_dir, tmp_path):
+    """Refresh passes over new snapshot paths do not pile up persisted
+    blocks: ``_memo.clear()`` releases the checkpoints the memo held, and no
+    EP1–EP4 step leaves a cache or checkpoint behind that no caller could
+    unpersist. Three passes, each over its own path to the snapshot and
+    each followed by a cleared memo and a JVM GC, must not grow the app's
+    persisted RDDs."""
+    import gc
+
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark import api
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo, registry
+
+    qs = registry.queries()
+
+    def persisted_after_pass(i: int) -> int:
+        d = tmp_path / f"snap-{i}"
+        d.symlink_to(sf_dir, target_is_directory=True)
+        d = str(d)
+        _memo.clear()
+        for df in (
+            api.ingest_and_build_graph(spark, d)[2],
+            api.engineer_features(spark, d),
+            qs["kfold_target_encoding"](spark, d),
+            qs["flagship_diverse_topk"](spark, d),
+            api.curate_corpus(spark, d),
+        ):
+            df.write.format("noop").mode("overwrite").save()
+        _memo.clear()
+        gc.collect()
+        spark._jvm.System.gc()
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    counts = [persisted_after_pass(i) for i in range(3)]
+    assert counts[2] <= counts[0], f"persisted RDDs after each refresh pass: {counts}"
+
+
+@pytest.mark.parametrize("session_first", [False, True], ids=["entry_first", "session_first"])
+def test_entry_file_serves_python_workers_from_any_cwd(sf_dir, tmp_path, session_first):
+    """The driver loads ``__spark_entry__.py`` by path, from any working
+    directory and with the repository on no path. Its Python workers must
+    import the package too, since pickled UDFs refer to it by module name:
+    a process started outside the repository collects a UDF-backed entry
+    whether its session starts before or after the entry file loads."""
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    script = f"""
+import importlib.util
+from pyspark.sql import SparkSession
+
+def session():
+    return (SparkSession.builder.master("local[2]").config("spark.sql.shuffle.partitions", "2")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+spark = session() if {session_first} else None
+spec = importlib.util.spec_from_file_location("__spark_entry__", {str(repo / "__spark_entry__.py")!r})
+mod = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(mod)
+spark = spark or session()
+assert mod.queries()["multimodal_codec_roundtrip_png"](spark, {sf_dir!r}).collect()
+"""
+    path = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p and pathlib.Path(p).resolve() != repo]
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(path)}
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600
+    )
+    assert run.returncode == 0, run.stderr[-3000:]

@@ -275,10 +275,11 @@ SERVING_PRUNE_POSITION = {
 @pytest.mark.parametrize("qname", sorted(SERVING_PRUNE_POSITION))
 def test_serving_prune_filters_memoized_position(spark, queries, qname):
     """A pruned serving request runs NO window over the valid products: the
-    global and per-category positions are ranked once per snapshot
-    (registry_serving._ranked_valid) and the request filters one of them
-    against a literal, prefix-sized bound (p_max+k or c_max+k — bounded by
-    one customer's purchase count, never by |part|)."""
+    per-category position is ranked once per snapshot with the scored
+    catalog (flagship.shared_scored_valid_products), the global one on top
+    of it (registry_serving._ranked_valid), and the request filters one of
+    them against a literal, prefix-sized bound (p_max+k or c_max+k —
+    bounded by one customer's purchase count, never by |part|)."""
     queries[qname](spark, SF_DIR).collect()  # warm the memo
     plan = queries[qname](spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
     pos = SERVING_PRUNE_POSITION[qname]
@@ -291,10 +292,10 @@ def test_serving_prune_filters_memoized_position(spark, queries, qname):
 def test_serving_ranked_products_no_single_partition_window(spark):
     """The memoized ranking behind every pruned serving request must keep
     |part| off a single task: the global position comes from the
-    distributed rank (operators/ranking.py) and the per-category window is
-    partitioned by category. Checked on the build's own plan and on every
-    plan it checkpoints on the way, with the memo disabled so the real
-    dataflow shows."""
+    distributed rank (operators/ranking.py) and the scored catalog's
+    per-category window is partitioned by category. Checked on the build's
+    own plan and on every plan it checkpoints on the way, with the memo
+    disabled so the real dataflow (the catalog build included) shows."""
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo, registry  # noqa: F401
     from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans.registry_serving import (
         _ranked_valid,
@@ -304,6 +305,53 @@ def test_serving_ranked_products_no_single_partition_window(spark):
         plans.append(_plan(spark, _ranked_valid(spark, SF_DIR)))
     for plan in plans:
         _assert_no_single_partition_window(plan, "serving product ranking")
+
+
+@pytest.mark.parametrize("qname", sorted(SERVING_PRUNE_POSITION))
+def test_pruned_serving_request_runs_no_python(spark, queries, qname):
+    """A pruned serving request is all JVM: no grouped-map or Arrow UDF
+    step ships its candidates to Python workers. The reference's greedy
+    diverse pick selects exactly the two-window top-k's rows, so it needs
+    no Python copy."""
+    plan = _plan(spark, queries[qname](spark, SF_DIR))
+    for op in ("FlatMapGroupsInPandas", "ArrowEvalPython"):
+        assert op not in plan, f"{qname}: {op} in the request's plan"
+
+
+def test_diverse_topk_windows_share_one_shuffle(spark, queries):
+    """The category-diverse top-k's two windows, per (customer, category)
+    and per customer, ride one hash shuffle on customer_id. Planned
+    separately, the category window shuffles on both keys and the customer
+    window shuffles again: one more job per greedy request."""
+    plan = _plan(spark, queries["serve_greedy_diverse_topk"](spark, SF_DIR))
+    shuffles = re.findall(r"Arguments: hashpartitioning\(([^)]*)\)", plan)
+    assert len(shuffles) == 1 and re.fullmatch(r"customer_id#\d+L?, \d+", shuffles[0]), shuffles
+
+
+def test_flagship_prune_prefix_reads_the_catalog_ranking(spark, tmp_path):
+    """Flagship's prune prefix filters the per-category position the scored
+    catalog already carries: building it runs no Window of its own, so the
+    per-category ranking is derived once per snapshot for flagship and
+    the serving family alike. The snapshot is read through a new path so
+    the memo builds the prefix here; the catalog and the purchase pairs
+    are warmed first, so the one checkpoint flagship takes is the
+    prefix's."""
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans import _memo
+    from e_commerce_knowledge_graph_and_graph_database_ml_recommandation_system_spark.plans.flagship import (
+        flagship,
+        shared_purchased_pairs,
+        shared_scored_valid_products,
+    )
+
+    snap = tmp_path / "snap"
+    snap.symlink_to(SF_DIR, target_is_directory=True)
+    sf_dir = str(snap)
+    shared_scored_valid_products(spark, sf_dir)
+    shared_purchased_pairs(spark, sf_dir)
+    with _memo.capturing_checkpoints() as plans:
+        flagship(spark, sf_dir)
+    assert len(plans) == 1, f"flagship took {len(plans)} checkpoints on a warm catalog"
+    assert "Window" not in plans[0], f"the prune prefix re-ranks the catalog:\n{plans[0][:3000]}"
 
 
 def test_ddsketch_exact_rider_no_row_scale_takeordered(spark, queries):
